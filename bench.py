@@ -41,6 +41,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = Q.queries()
+    print(Q.verification_backlog(), file=sys.stderr)
     timings: dict[str, float] = {}
     # Warm each query's plan shape at sf0.001 first: JIT + whole-stage
     # codegen compilation is per-plan and would otherwise be billed to the

@@ -82,297 +82,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return tables.load_table(spark, sf_dir, name)
 
 
-# The driver's correctness sweep caps at ~50 queries taken in queries()
-# key order. Queries with a green CORRECTNESS row from a past round are
-# listed LAST, so the not-yet-driver-verified remainder sits at the front
-# and every query accumulates a driver-verified row across rounds.
-_DRIVER_VERIFIED = [
-    # Ordered oldest-verification-first: with every registered query now
-    # holding a driver-green row (rounds 1-3), the sweep re-verifies the
-    # stalest ~50 each round for regression coverage.
-    # round 1 (CORRECTNESS_r01.json, all green)
-    "rdl_flagship", "filter_scan", "prefix_scan", "rowkey_range_scan",
-    "point_get", "lookup_join", "semi_join", "anti_join", "asof_join",
-    "dedup_first_wins", "sort_limit", "date_spine", "pivot_events",
-    "unpivot_roundtrip", "agg_pricing_summary", "group_topk", "sessionize",
-    "q3_shipping", "event_funnel", "median_price", "moving_avg",
-    "range_window", "set_ops", "rollup_agg", "distinct_agg",
-    "scalar_subquery_q17", "exists_agg", "outer_join_histogram",
-    "full_outer_reconcile", "window_ranks", "gap_fill_ffill",
-    "incremental_agg", "ordered_export", "referential_integrity",
-    "embedding_stats", "calendar_agg", "json_typed_parse", "null_semantics",
-    "date_arithmetic", "dedup_incremental", "union_by_name",
-    "token_positions", "regex_extract_numbers", "fuzzy_nation_pairs",
-    "stats_agg", "skew_report", "max_concurrency", "argmin_argmax",
-    "sequence_detect", "tumbling_window_agg",
-    # round 2 (CORRECTNESS_r02.json, all green)
-    "marker_filter_strict", "marker_filter_lenient", "asof_join_forward",
-    "disjunctive_pushdown", "string_agg_nations", "filtered_agg", "cube_agg",
-    "value_histogram", "period_over_period", "retention_cohorts",
-    "scalar_funcs", "json_extract", "dedup_exact", "minhash_signature",
-    "minhash_lsh_pairs", "minhash_lsh_capped", "ngram_jaccard_pairs",
-    "neardup_clusters", "embedding_neardup", "embedding_neardup_lsh",
-    "simhash_fingerprints", "text_profile", "language_id",
-    "rolling_fingerprint", "quality_score", "hash_split", "vocab_topk",
-    "stratified_sample", "pack_sequences", "redact_pii", "repetition_score",
-    "decontaminate", "tfidf_topk", "length_profile", "range_join_events",
-    "column_profile", "heavy_hitters", "approx_profile", "curation_pipeline",
-    "sql_passthrough_q5", "multimodal_features", "multimodal_frame_plan",
-    "ann_cosine_topk", "ann_ivf_topk", "ann_lsh_topk", "chunk_documents",
-    "scd2_user_state", "ntile_quartiles", "domain_mixture",
-    "percentile_bands",
-    # round 3 (CORRECTNESS_r03.json: 49 green + pagerank_neardup no_oracle)
-    "window_frame_values", "grouping_sets_explicit", "array_ops_surface",
-    "collect_set_groups", "lm_score", "source_overlap", "bitwise_bool_aggs",
-    "gap_fill_linear", "pivot_multi_agg", "q10_returned_revenue",
-    "q7_nation_volume", "set_ops_all", "string_funcs_extended",
-    "corr_covar_agg", "date_part_surface", "weighted_sample",
-    "q18_large_orders", "q22_idle_customers", "sliding_distinct_users",
-    "arrival_gap_audit", "variant_extract", "user_growth_curve",
-    "revenue_share", "conditional_expr_surface", "explode_outer_matches",
-    "hopping_window_agg", "pagerank_neardup", "point_in_time_join",
-    "null_safe_division", "line_dedup_boilerplate", "recursive_chain",
-    "udtf_chunk_windows", "map_ops_surface", "q6_forecast_revenue",
-    "q14_promo_effect", "q15_top_supplier", "lateral_topk",
-    "group_by_all_surface", "try_funcs_surface", "q8_market_share",
-    "neardup_canonical", "cooccurrence_lift", "graph_triangle_stats",
-    "zorder_layout_key", "expectation_report", "forecast_backtest",
-    "mad_outlier_days", "interval_coverage", "null_safe_join",
-    "minhash_incremental",
-    # round 4 (CORRECTNESS_r04.json: 45 green + 5 declared no_oracle;
-    # trailing 17 are round-1 names re-verified by the r04 sweep, moved
-    # here so rotation order stays oldest-verification-first)
-    "simhash_hamming_pairs", "embedding_kmeans", "quality_band_sample",
-    "q4_order_priority", "q12_priority_split", "q21_waiting_supplier",
-    "semantic_dedup", "zorder_scan_demo", "q2_min_cost_supplier",
-    "q9_product_profit", "q11_important_stock", "q16_supplier_part_counts",
-    "q20_excess_inventory", "semantic_decontaminate", "hll_sketch_rollup",
-    "bpe_train_merges", "bpe_tokenize", "epoch_shuffle", "entity_resolution",
-    "skew_salted_join", "substring_dup_spans", "winnow_fingerprints",
-    "rollup_incremental", "snapshot_diff", "ngram_containment_pairs",
-    "embedding_vector_ops", "length_bucket_batching", "histogram_equiwidth",
-    "reservoir_per_group", "widetable_index_lookup", "linear_fit_by_type",
-    "curation_audit", "winnow_match_pairs", "rdl_flagship", "filter_scan",
-    "prefix_scan", "rowkey_range_scan", "point_get", "lookup_join",
-    "semi_join", "anti_join", "asof_join", "dedup_first_wins", "sort_limit",
-    "date_spine", "pivot_events", "unpivot_roundtrip", "agg_pricing_summary",
-    "group_topk", "sessionize",
-    # round 6 (CORRECTNESS_r06.json: 44 green + 6 declared no_oracle; the
-    # sweep's 50 names in checked order — dedup-path queries re-verified
-    # after the r6 edits, plus round-1 names the rotation reached)
-    "dedup_first_wins", "dedup_exact", "minhash_signature",
-    "minhash_lsh_pairs", "minhash_lsh_capped", "ngram_jaccard_pairs",
-    "neardup_clusters", "simhash_fingerprints", "simhash_hamming_pairs",
-    "vocab_topk", "decontaminate", "embedding_kmeans",
-    "kmeans_assign_iter1", "ann_lsh_topk", "lsh_bucket_assign",
-    "array_ops_surface", "lm_score", "quality_band_sample",
-    "source_overlap", "pagerank_neardup", "line_dedup_boilerplate",
-    "neardup_canonical", "graph_triangle_stats", "minhash_incremental",
-    "bpe_train_merges", "bpe_pair_counts", "bpe_tokenize",
-    "substring_dup_spans", "winnow_fingerprints", "ngram_containment_pairs",
-    "length_bucket_batching", "winnow_match_pairs", "winnow_match_capped",
-    "q3_shipping", "event_funnel", "median_price", "moving_avg",
-    "range_window", "set_ops", "rollup_agg", "distinct_agg",
-    "scalar_subquery_q17", "exists_agg", "outer_join_histogram",
-    "full_outer_reconcile", "window_ranks", "gap_fill_ffill",
-    "incremental_agg", "ordered_export", "referential_integrity",
-    # round 7 (CORRECTNESS_r07.json: 43 green + 7 declared no_oracle; the
-    # sweep's green names in checked order — includes the 7 queries new or
-    # promoted in r7, which enter the verified list here for the first
-    # time: simhash_fingerprints_md5, ivf_cell_assign, bigram_lm_score,
-    # pagerank_iter1, semantic_pairs_seeded, bpe_pair_counts_round1,
-    # bpe_apply_fixed)
-    "dedup_first_wins", "dedup_exact", "minhash_signature",
-    "minhash_lsh_pairs", "minhash_lsh_capped", "ngram_jaccard_pairs",
-    "neardup_clusters", "embedding_neardup", "embedding_neardup_lsh",
-    "simhash_hamming_pairs", "simhash_fingerprints_md5", "vocab_topk",
-    "decontaminate", "tfidf_topk", "length_profile", "column_profile",
-    "curation_pipeline", "multimodal_features", "ann_cosine_topk",
-    "kmeans_assign_iter1", "ann_lsh_topk", "lsh_bucket_assign",
-    "ivf_cell_assign", "chunk_documents", "array_ops_surface", "lm_score",
-    "bigram_lm_score", "quality_band_sample", "source_overlap",
-    "pagerank_iter1", "line_dedup_boilerplate", "neardup_canonical",
-    "semantic_pairs_seeded", "graph_triangle_stats", "minhash_incremental",
-    "semantic_decontaminate", "bpe_pair_counts", "bpe_pair_counts_round1",
-    "bpe_apply_fixed", "substring_dup_spans", "winnow_fingerprints",
-    "ngram_containment_pairs", "length_bucket_batching",
-    # round 8 (CORRECTNESS_r08.json: 46 green + 4 declared no_oracle; the
-    # sweep's green names in checked order — includes the 10 queries new or
-    # answer-changed in r8, which enter the verified list here for the
-    # first time: file_corpus_dedup, temperature_mixture_rates,
-    # temperature_mixture_sample, bigram_lm_score_frozen,
-    # leakage_safe_split, dsir_weights, dsir_select,
-    # quality_classifier_score, hard_negative_topk, unimax_mixture_rates)
-    "file_corpus_dedup", "curation_pipeline", "curation_audit",
-    "temperature_mixture_rates", "temperature_mixture_sample",
-    "bigram_lm_score_frozen", "leakage_safe_split", "dsir_weights",
-    "dsir_select", "quality_classifier_score", "hard_negative_topk",
-    "unimax_mixture_rates", "dedup_first_wins", "dedup_exact",
-    "minhash_signature", "minhash_lsh_pairs", "minhash_lsh_capped",
-    "ngram_jaccard_pairs", "neardup_clusters", "embedding_neardup",
-    "embedding_neardup_lsh", "simhash_hamming_pairs",
-    "simhash_fingerprints_md5", "hash_split", "vocab_topk",
-    "stratified_sample", "decontaminate", "tfidf_topk", "length_profile",
-    "column_profile", "multimodal_features", "multimodal_frame_plan",
-    "ann_cosine_topk", "kmeans_assign_iter1", "ann_lsh_topk",
-    "lsh_bucket_assign", "ivf_cell_assign", "chunk_documents",
-    "domain_mixture", "array_ops_surface", "lm_score", "bigram_lm_score",
-    "quality_band_sample", "source_overlap", "pagerank_iter1",
-    "line_dedup_boilerplate",
-    # round 9 (CORRECTNESS_r09.json: 47 green + 3 declared no_oracle; the
-    # sweep's green names in checked order — includes the 11 queries new
-    # in r9, which enter the verified list here for the first time:
-    # hard_negative_topk_lsh, dsir_select_gumbel, gopher_quality_flags,
-    # c4_line_filter, gopher_repetition_flags, ccnet_perplexity_buckets,
-    # pq_encode, pq_ann_topk, ivf_pq_topk, gopher_dupline_flags,
-    # dsir_weights_frozen)
-    "hard_negative_topk_lsh", "dsir_select_gumbel", "gopher_quality_flags",
-    "c4_line_filter", "gopher_repetition_flags", "ccnet_perplexity_buckets",
-    "pq_encode", "pq_ann_topk", "ivf_pq_topk", "gopher_dupline_flags",
-    "dsir_weights_frozen", "temperature_mixture_sample", "file_corpus_dedup",
-    "curation_pipeline", "curation_audit", "dsir_select", "dsir_weights",
-    "quality_band_sample", "hard_negative_topk", "winnow_match_pairs",
-    "winnow_match_capped", "neardup_canonical", "semantic_pairs_seeded",
-    "graph_triangle_stats", "minhash_incremental", "semantic_decontaminate",
-    "bpe_pair_counts", "bpe_pair_counts_round1", "bpe_apply_fixed",
-    "substring_dup_spans", "winnow_fingerprints", "ngram_containment_pairs",
-    "length_bucket_batching", "leakage_safe_split", "embedding_neardup",
-    "embedding_neardup_lsh", "text_profile", "language_id",
-    "rolling_fingerprint", "quality_score", "hash_split",
-    "stratified_sample", "pack_sequences", "redact_pii", "repetition_score",
-    "tfidf_topk", "length_profile",
-    # round 10 (CORRECTNESS_r10.json: 47 green + 3 declared no_oracle; the
-    # sweep's green names in checked order — includes the 10 queries new
-    # in r10, which enter the verified list here for the first time:
-    # curation_pipeline_rules, curation_audit_rules,
-    # gopher_repetition_sampled, dsir_frozen_gumbel, ivf_lloyd_update,
-    # decontaminate_bloom, gopher_dupparagraph_flags, kmeans_update_iter1,
-    # classifier_train_round1, quality_signals)
-    "curation_pipeline_rules", "curation_audit_rules",
-    "gopher_repetition_sampled", "dsir_frozen_gumbel", "ivf_lloyd_update",
-    "decontaminate_bloom", "gopher_dupparagraph_flags",
-    "kmeans_update_iter1", "classifier_train_round1", "quality_signals",
-    "curation_pipeline", "curation_audit", "ccnet_perplexity_buckets",
-    "dsir_select_gumbel", "gopher_repetition_flags",
-    "gopher_quality_flags", "c4_line_filter", "gopher_dupline_flags",
-    "pq_encode", "pq_ann_topk", "ivf_pq_topk", "weighted_sample",
-    "temperature_mixture_rates", "bigram_lm_score_frozen",
-    "quality_classifier_score", "unimax_mixture_rates", "column_profile",
-    "ann_cosine_topk", "kmeans_assign_iter1", "ann_lsh_topk",
-    "lsh_bucket_assign", "ivf_cell_assign", "domain_mixture",
-    "bigram_lm_score", "dedup_first_wins", "dedup_exact",
-    "file_corpus_dedup", "minhash_signature", "minhash_lsh_pairs",
-    "minhash_lsh_capped", "ngram_jaccard_pairs", "neardup_clusters",
-    "leakage_safe_split", "embedding_neardup", "embedding_neardup_lsh",
-    "simhash_hamming_pairs", "simhash_fingerprints_md5",
-    # round 11 (CORRECTNESS_r11.json: 47 green + 3 declared no_oracle; the
-    # sweep's green names in checked order — includes the 2 queries new in
-    # r11 (curate_from_signals, widetable_index_incremental), the promoted
-    # pagerank_neardup (first full-oracle pass), and the rewritten
-    # skew_report)
-    "skew_report", "curate_from_signals", "pagerank_neardup",
-    "widetable_index_incremental", "vocab_topk", "decontaminate",
-    "chunk_documents", "array_ops_surface", "lm_score", "source_overlap",
-    "pagerank_iter1", "line_dedup_boilerplate", "hard_negative_topk_lsh",
-    "dsir_weights_frozen", "dsir_select", "dsir_weights",
-    "quality_band_sample", "hard_negative_topk", "winnow_match_pairs",
-    "winnow_match_capped", "neardup_canonical", "semantic_pairs_seeded",
-    "graph_triangle_stats", "minhash_incremental", "semantic_decontaminate",
-    "bpe_pair_counts", "bpe_pair_counts_round1", "bpe_apply_fixed",
-    "substring_dup_spans", "winnow_fingerprints", "ngram_containment_pairs",
-    "length_bucket_batching", "text_profile", "language_id",
-    "rolling_fingerprint", "quality_score", "pack_sequences", "redact_pii",
-    "repetition_score", "tfidf_topk", "length_profile", "neardup_clusters",
-    "leakage_safe_split", "decontaminate_bloom", "column_profile",
-    "curation_pipeline", "kmeans_update_iter1",
-    # round 12 (CORRECTNESS_r12.json: 47 green + 3 declared no_oracle; the
-    # sweep's green names in checked order — includes the 2 queries new in
-    # r12 (ann_ivf_pq_frozen, ann_ivf_pq_extend) and the 2 promoted to full
-    # oracles (bpe_train_merges, bpe_tokenize))
-    "bpe_train_merges", "bpe_tokenize", "ann_ivf_pq_frozen",
-    "ann_ivf_pq_extend", "entity_resolution", "curation_pipeline_rules",
-    "curation_audit_rules", "gopher_repetition_sampled", "dsir_frozen_gumbel",
-    "ivf_lloyd_update", "gopher_dupparagraph_flags", "classifier_train_round1",
-    "quality_signals", "curation_audit", "ccnet_perplexity_buckets",
-    "dsir_select_gumbel", "gopher_repetition_flags", "gopher_quality_flags",
-    "c4_line_filter", "gopher_dupline_flags", "weighted_sample",
-    "bigram_lm_score_frozen", "quality_classifier_score", "bigram_lm_score",
-    "neardup_clusters", "leakage_safe_split", "embedding_neardup",
-    "embedding_neardup_lsh", "tfidf_topk", "length_profile", "column_profile",
-    "curation_pipeline", "ann_cosine_topk", "kmeans_assign_iter1",
-    "kmeans_update_iter1", "ann_lsh_topk", "lsh_bucket_assign",
-    "ivf_cell_assign", "pq_encode", "pq_ann_topk", "ivf_pq_topk",
-    "pagerank_neardup", "pagerank_iter1", "neardup_canonical",
-    "semantic_pairs_seeded", "semantic_decontaminate",
-    "widetable_index_incremental",
-    # round 13 (CORRECTNESS_r13.json: 50/50 green, hash_match on all — the
-    # ANN / k-means / SemDeDup rotation front incl. the three exact_replay
-    # promotions plus long-tail controls; sweep order)
-    "ann_ivf_topk", "embedding_kmeans", "semantic_dedup",
-    "curate_from_signals", "hard_negative_topk_lsh", "dsir_weights_frozen",
-    "dsir_select", "dsir_weights", "hard_negative_topk", "embedding_neardup",
-    "embedding_neardup_lsh", "ann_cosine_topk", "kmeans_assign_iter1",
-    "kmeans_update_iter1", "ann_lsh_topk", "lsh_bucket_assign",
-    "ivf_cell_assign", "ivf_lloyd_update", "pq_encode", "pq_ann_topk",
-    "ivf_pq_topk", "ann_ivf_pq_frozen", "ann_ivf_pq_extend",
-    "semantic_pairs_seeded", "semantic_decontaminate", "embedding_stats",
-    "calendar_agg", "json_typed_parse", "null_semantics", "date_arithmetic",
-    "dedup_incremental", "union_by_name", "token_positions",
-    "regex_extract_numbers", "fuzzy_nation_pairs", "stats_agg",
-    "max_concurrency", "argmin_argmax", "sequence_detect",
-    "tumbling_window_agg", "marker_filter_strict", "marker_filter_lenient",
-    "asof_join_forward", "disjunctive_pushdown", "string_agg_nations",
-    "filtered_agg", "cube_agg", "value_histogram", "period_over_period",
-    "retention_cohorts",
-    # round 14 (CORRECTNESS_r14.json: 49/50 green, hash_match on all; the
-    # one non-green is approx_profile, declared rows-only by necessity —
-    # sketch bytes — and deliberately NOT listed here; sweep order)
-    "multimodal_decode_real", "pretraining_run", "ann_ivf_pq_rerank",
-    "ann_ivf_pq_filtered", "sq8_encode", "ann_sq8_topk",
-    "kmeans_assign_frozen", "multimodal_resize_real", "multimodal_downsample",
-    "curation_audit_rules", "curate_from_signals", "ann_ivf_topk",
-    "embedding_kmeans", "semantic_dedup", "file_corpus_dedup",
-    "embedding_neardup", "embedding_neardup_lsh", "curation_pipeline",
-    "multimodal_features", "multimodal_frame_plan", "ann_cosine_topk",
-    "kmeans_assign_iter1", "kmeans_update_iter1", "ann_lsh_topk",
-    "lsh_bucket_assign", "ivf_cell_assign", "ivf_lloyd_update", "pq_encode",
-    "pq_ann_topk", "ivf_pq_topk", "ann_ivf_pq_frozen", "ann_ivf_pq_extend",
-    "semantic_pairs_seeded", "semantic_decontaminate", "curation_audit",
-    "curation_pipeline_rules", "hard_negative_topk", "hard_negative_topk_lsh",
-    "scalar_funcs", "json_extract", "range_join_events", "heavy_hitters",
-    "sql_passthrough_q5", "scd2_user_state", "ntile_quartiles",
-    "percentile_bands", "window_frame_values", "grouping_sets_explicit",
-    "collect_set_groups",
-]
-
-def _keep_latest(names: list[str]) -> list[str]:
-    """Names re-verified by a later round's sweep are listed twice above
-    (their original round block AND the later round's block); keep only the
-    LATEST occurrence so rotation order stays oldest-verification-first."""
-    seen: set[str] = set()
-    kept_reversed: list[str] = []
-    for n in reversed(names):
-        if n not in seen:
-            seen.add(n)
-            kept_reversed.append(n)
-    return kept_reversed[::-1]
-
-
-_DRIVER_VERIFIED = _keep_latest(_DRIVER_VERIFIED)
-
-
 # ---------------------------------------------------------------------------
-# Edit-reverification guard. A name in _DRIVER_VERIFIED only counts as
-# verified while the code that produced its verified answer is unchanged:
-# each query's fingerprint (its function source + oracle SQL + the source of
-# every learn_hbase_spark module / queries-local helper the function
-# references) is recorded in _verified_hashes.json by
-# tools/record_verified_hashes.py AT VERIFICATION TIME. Editing a query — or
-# an operator module it calls into — changes the fingerprint, the name drops
-# out of the verified tail at runtime, and it re-enters the FRONT of the
-# rotation, so the next driver sweep re-checks it before a stale green row
-# can shadow changed code (the round-5 process hole: edited queries kept
-# their old verified slot and skipped the next sweep).
+# Verification rotation + edit-reverification guard. The driver's
+# correctness sweep caps at ~50 queries taken in queries() key order, so
+# that order puts the queries most in need of a check first. Each verified
+# query has a record in _verified_hashes.json, written by
+# tools/record_verified_hashes.py AT VERIFICATION TIME:
+#   {name: {"fp": fingerprint, "round": N, "seq": position in round N's sweep}}
+# where the fingerprint covers its function source + oracle SQL + the source
+# of every learn_hbase_spark module / queries-local helper it references.
+# A record only counts while the fingerprint still matches: editing a query
+# — or an operator module it calls into — drops it out of the verified tail
+# at runtime and back into the FRONT of the rotation, so the next sweep
+# re-checks it before a stale green row can shadow changed code (the round-5
+# process hole: edited queries kept their old verified slot and skipped the
+# next sweep). Rotation order: never-recorded queries, then stale ones (both
+# in registration order), then verified ones oldest verification first.
 # ---------------------------------------------------------------------------
 
 _VERIFIED_HASHES_PATH = os.path.join(
@@ -481,7 +206,8 @@ def query_fingerprint(name: str) -> str:
     return h.hexdigest()
 
 
-def recorded_fingerprints() -> dict[str, str]:
+def recorded_verifications() -> dict[str, dict]:
+    """``{name: {"fp", "round", "seq"}}`` as last written by the recorder."""
     try:
         with open(_VERIFIED_HASHES_PATH) as fh:
             return json.load(fh)
@@ -489,48 +215,35 @@ def recorded_fingerprints() -> dict[str, str]:
         return {}
 
 
-def _verified_against(recorded: dict[str, str]) -> list[str]:
-    return [
-        n
-        for n in _DRIVER_VERIFIED
-        if n in _QUERIES and recorded.get(n) == query_fingerprint(n)
-    ]
+def _rotation_key(name: str, records: dict[str, dict]) -> tuple:
+    rec = records.get(name)
+    if rec is None:
+        return (0,)  # never verified
+    if rec["fp"] != query_fingerprint(name):
+        return (1,)  # stale: changed since its verification
+    return (2, rec["round"], rec["seq"])
 
 
 @functools.lru_cache(maxsize=1)
-def _still_verified() -> tuple[str, ...]:
-    return tuple(_verified_against(recorded_fingerprints()))
-
-
-# Sweep-priority hint: queries whose ANSWER changed (or that are brand new)
-# this round, listed here so they take the first slots of the rotation
-# front. Without this the front follows registration order, and when a
-# module edit invalidates more fingerprints than the driver's ~50-slot
-# sweep can hold, a late-registered answer-changed query (curation_audit
-# in r8) could wait a round behind answer-UNCHANGED queries whose
-# fingerprints moved only via a shared-module edit. Maintained per round;
-# stale names cost nothing (they sort first only while unverified).
-_SWEEP_PRIORITY: list[str] = [
-    # round 15: new/answer-changed queries first (prepended as this round's
-    # work lands — DEDUPE: enumerate-rank keeps the LAST index, so a
-    # duplicate silently demotes). The r14 names below are stale carryover
-    # (verified ⇒ inert) kept so the list is never empty at round start.
-    "sq8_assign_frozen", "ann_sq8_frozen", "multimodal_video_frames",
-    "approx_profile_bounds", "ann_ivf_sq8_topk", "semdedup_incremental",
-    "multimodal_decode_real", "pretraining_run", "ann_ivf_pq_rerank",
-    "ann_sq8_topk", "kmeans_assign_frozen",
-]
+def _rotation_keys() -> dict[str, tuple]:
+    records = recorded_verifications()
+    return {n: _rotation_key(n, records) for n in _QUERIES}
 
 
 def _rotated(mapping: dict) -> dict:
-    verified = [n for n in _still_verified() if n in mapping]
-    seen = set(verified)
-    front = [n for n in mapping if n not in seen]
-    rank = {n: i for i, n in enumerate(_SWEEP_PRIORITY)}
-    front.sort(key=lambda n: rank.get(n, len(rank)))  # stable: ties keep order
-    out = {n: mapping[n] for n in front}
-    out.update({n: mapping[n] for n in verified})
-    return out
+    keys = _rotation_keys()
+    # sorted() is stable: the unverified groups keep registration order
+    return {n: mapping[n] for n in sorted(mapping, key=keys.__getitem__)}
+
+
+def verification_backlog() -> str:
+    """One status line: how many registered queries still wait for a
+    driver verification of their current code."""
+    groups = [k[0] for k in _rotation_keys().values()]
+    return (
+        f"verification backlog: {sum(g < 2 for g in groups)} of "
+        f"{len(groups)} unverified ({groups.count(0)} never verified)"
+    )
 
 
 def queries() -> dict[str, QueryFn]:

@@ -8,12 +8,6 @@ from __future__ import annotations
 from learn_hbase_spark import queries as Q
 
 
-def test_keep_latest_dedup():
-    assert Q._keep_latest(["a", "b", "a", "c", "b"]) == ["a", "c", "b"]
-    assert Q._keep_latest([]) == []
-    assert Q._keep_latest(["x"]) == ["x"]
-
-
 def test_fingerprints_are_stable_and_per_query():
     a = Q.query_fingerprint("agg_pricing_summary")
     assert a == Q.query_fingerprint("agg_pricing_summary")
@@ -42,29 +36,28 @@ def test_fingerprint_covers_transitive_package_imports():
     assert "mod:learn_hbase_spark.operators.dedup" in parts
 
 
-def test_changed_fingerprint_moves_query_to_rotation_front():
-    recorded = {n: Q.query_fingerprint(n) for n in Q._DRIVER_VERIFIED}
-    verified = Q._verified_against(recorded)
-    assert verified == [n for n in Q._DRIVER_VERIFIED if n in Q._QUERIES]
+def test_changed_fingerprint_moves_query_to_rotation_front(monkeypatch):
+    monkeypatch.setattr(Q, "_rotation_keys", Q._rotation_keys.__wrapped__)
+    names = list(Q._QUERIES)
+    records = {
+        n: {"fp": Q.query_fingerprint(n), "round": 1, "seq": i}
+        for i, n in enumerate(names)
+    }
+    monkeypatch.setattr(Q, "recorded_verifications", lambda: records)
+    assert list(Q.queries()) == names  # all verified, (round, seq) order
 
-    # tamper one recorded hash = "this query's code changed since its
-    # verification": it must leave the verified tail
-    victim = Q._DRIVER_VERIFIED[-1]
-    recorded[victim] = "0" * 64
-    verified = Q._verified_against(recorded)
-    assert victim not in verified
-
-    # and in the resulting rotation it sits in the unverified FRONT section
-    order = list(Q._QUERIES)
-    front = [n for n in order if n not in set(verified)]
-    rotation = front + [n for n in verified]
-    assert rotation.index(victim) < len(front)
-    assert set(rotation) == set(order)
+    # tamper the newest record = "this query's code changed since its
+    # verification": it must leave the verified tail for the FRONT
+    victim = names[-1]
+    records[victim] = dict(records[victim], fp="0" * 64)
+    rotation = list(Q.queries())
+    assert rotation[0] == victim
+    assert rotation[1:] == names[:-1]
 
 
 def test_recorded_file_only_contains_registered_names():
-    recorded = Q.recorded_fingerprints()
-    assert recorded, "bootstrap _verified_hashes.json missing"
+    recorded = Q.recorded_verifications()
+    assert recorded, "_verified_hashes.json missing"
     assert set(recorded) <= set(Q._QUERIES)
 
 
@@ -114,22 +107,29 @@ def test_package_module_closure_terminates_on_import_cycles():
     assert len(parts) == 2
 
 
-def test_sweep_priority_names_lead_the_rotation_front(monkeypatch):
-    """_SWEEP_PRIORITY names (new or answer-changed this round) take the
-    first rotation slots while unverified; verified names stay in the
-    tail regardless of priority; unknown priority names are inert."""
+def test_rotation_puts_never_recorded_then_stale_then_oldest_verified(
+    monkeypatch,
+):
+    """Never-recorded queries lead the front and stale ones follow, both in
+    registration order; verified queries fill the tail oldest-first by
+    (round, seq), whatever their registration order."""
+    monkeypatch.setattr(Q, "_rotation_keys", Q._rotation_keys.__wrapped__)
+    monkeypatch.setattr(Q, "query_fingerprint", lambda n: f"fp_{n}")
     names = list(Q._QUERIES)
-    pri = [n for n in Q._SWEEP_PRIORITY if n in Q._QUERIES]
-    assert pri, "priority list should name registered queries"
-    # pretend everything EXCEPT the priority names is verified
-    monkeypatch.setattr(
-        Q, "_still_verified", lambda: tuple(n for n in names if n not in pri)
+    never = [names[5], names[100]]
+    stale = [names[3], names[50]]
+    verified = [n for n in reversed(names) if n not in never + stale]
+    records = {
+        n: {"fp": f"fp_{n}", "round": 1 + i // 50, "seq": i % 50}
+        for i, n in enumerate(verified)
+    }
+    records.update({n: {"fp": "old", "round": 99, "seq": 0} for n in stale})
+    monkeypatch.setattr(Q, "recorded_verifications", lambda: records)
+
+    expected = [names[5], names[100], names[3], names[50], *verified]
+    assert list(Q.queries()) == expected
+    assert list(Q.oracle_sql()) == [n for n in expected if n in Q._ORACLES]
+    assert Q.verification_backlog() == (
+        f"verification backlog: 4 of {len(names)} unverified "
+        "(2 never verified)"
     )
-    rotated = list(Q.queries())
-    assert rotated[: len(pri)] == pri
-    # now pretend a priority name is ALSO verified: it must move to the
-    # tail (priority only orders the unverified front)
-    monkeypatch.setattr(Q, "_still_verified", lambda: (pri[0],))
-    rotated2 = list(Q.queries())
-    assert rotated2[-1] == pri[0]
-    assert rotated2[: len(pri) - 1] == pri[1:]

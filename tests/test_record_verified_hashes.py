@@ -1,10 +1,12 @@
 """Unit tests for tools/record_verified_hashes.py — the write side of the
 edit-reverification guard. Pure-registry: fingerprints are monkeypatched,
-no Spark. The three paths under test:
+no Spark. The paths under test:
 
-  (1) oracle-green this round        -> re-stamped to the current hash
-  (2) rows-only + changed + check OK -> re-stamped (weaker tier, gated)
-  (3) changed but not re-checked     -> kept stale (stays at rotation front)
+  (1) oracle-green this round        -> stamped with the current hash, this
+                                        round and its sweep position
+  (2) rows-only + changed + check OK -> stamped (weaker tier, gated)
+  (3) not re-checked this round      -> record kept as it is (a changed one
+                                        stays stale, at the rotation front)
 """
 
 from __future__ import annotations
@@ -33,30 +35,39 @@ def _load_tool():
     return tool
 
 
+_GREEN = {
+    "err": None,
+    "rows_match": True,
+    "schema_match": True,
+    "hash_match": True,
+}
+
+
 @pytest.fixture()
 def tool(monkeypatch, tmp_path):
     t = _load_tool()
-    # three real registry names standing in for the three paths
-    names = ["rdl_flagship", "filter_scan", "prefix_scan"]
+    # real registry names standing in for the paths; point_get has no record
+    names = ["rdl_flagship", "filter_scan", "prefix_scan", "point_get"]
     fingerprints = {n: f"cur_{n}" for n in names}
-    monkeypatch.setattr(t.Q, "_DRIVER_VERIFIED", names)
     monkeypatch.setattr(t.Q, "query_fingerprint", lambda n: fingerprints[n])
     monkeypatch.setattr(
         t.Q, "_VERIFIED_HASHES_PATH", str(tmp_path / "hashes.json")
     )
     # recorded state: rdl_flagship changed, filter_scan changed,
     # prefix_scan unchanged
-    recorded = {
-        "rdl_flagship": "old",
-        "filter_scan": "old",
-        "prefix_scan": "cur_prefix_scan",
+    records = {
+        "rdl_flagship": {"fp": "old", "round": 1, "seq": 0},
+        "filter_scan": {"fp": "old", "round": 1, "seq": 1},
+        "prefix_scan": {"fp": "cur_prefix_scan", "round": 3, "seq": 7},
     }
-    monkeypatch.setattr(t.Q, "recorded_fingerprints", lambda: dict(recorded))
+    monkeypatch.setattr(
+        t.Q, "recorded_verifications", lambda: json.loads(json.dumps(records))
+    )
     return t
 
 
-def _run(tool, tmp_path, rows):
-    cfile = tmp_path / "CORRECTNESS_test.json"
+def _run(tool, tmp_path, rows, fname="CORRECTNESS_r17.json"):
+    cfile = tmp_path / fname
     cfile.write_text(json.dumps(rows))
     tool.main([str(cfile)])
     with open(tool.Q._VERIFIED_HASHES_PATH) as fh:
@@ -64,32 +75,48 @@ def _run(tool, tmp_path, rows):
 
 
 def test_green_row_restamps_changed_fingerprint(tool, tmp_path):
-    rows = {
-        "rdl_flagship": {
-            "err": None,
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-        }
-    }
+    rows = {"point_get": {"err": "boom"}, "rdl_flagship": _GREEN}
     rec = _run(tool, tmp_path, rows)
-    assert rec["rdl_flagship"] == "cur_rdl_flagship"  # fresh verification
-    assert rec["filter_scan"] == "old"  # changed, unchecked -> stale
-    assert rec["prefix_scan"] == "cur_prefix_scan"  # unchanged no-op
+    # fresh verification: round 17, second row of the sweep
+    assert rec["rdl_flagship"] == {
+        "fp": "cur_rdl_flagship", "round": 17, "seq": 1,
+    }
+    # changed, unchecked -> stale
+    assert rec["filter_scan"] == {"fp": "old", "round": 1, "seq": 1}
+    assert "point_get" not in rec  # failed row records nothing
+
+
+def test_green_name_without_record_is_recorded(tool, tmp_path):
+    rec = _run(tool, tmp_path, {"point_get": _GREEN})
+    assert rec["point_get"] == {"fp": "cur_point_get", "round": 17, "seq": 0}
+
+
+def test_unchecked_name_keeps_round_and_reverified_name_moves(
+    tool, tmp_path
+):
+    # prefix_scan is unchanged: not in this round's sweep -> old round kept
+    rec = _run(tool, tmp_path, {"rdl_flagship": _GREEN})
+    assert rec["prefix_scan"] == {
+        "fp": "cur_prefix_scan", "round": 3, "seq": 7,
+    }
+    # green again this round -> it moves to the new round and position
+    rec = _run(tool, tmp_path, {"rdl_flagship": _GREEN, "prefix_scan": _GREEN})
+    assert rec["prefix_scan"] == {
+        "fp": "cur_prefix_scan", "round": 17, "seq": 1,
+    }
+
+
+def test_correctness_file_without_round_number_is_rejected(tool, tmp_path):
+    with pytest.raises(SystemExit, match="no round number"):
+        _run(tool, tmp_path, {"rdl_flagship": _GREEN}, "CORRECTNESS_test.json")
+    assert not os.path.exists(tool.Q._VERIFIED_HASHES_PATH)
 
 
 def test_partial_green_row_does_not_restamp(tool, tmp_path):
     # hash mismatch (or schema/rows) must NOT count as verification
-    rows = {
-        "rdl_flagship": {
-            "err": None,
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": False,
-        }
-    }
+    rows = {"rdl_flagship": dict(_GREEN, hash_match=False)}
     rec = _run(tool, tmp_path, rows)
-    assert rec["rdl_flagship"] == "old"
+    assert rec["rdl_flagship"]["fp"] == "old"
 
 
 def test_rows_only_restamp_requires_passing_declared_check(
@@ -108,12 +135,14 @@ def test_rows_only_restamp_requires_passing_declared_check(
         lambda n: calls.append(n) or False,
     )
     rec = _run(tool, tmp_path, rows)
-    assert rec["rdl_flagship"] == "old" and calls == ["rdl_flagship"]
+    assert rec["rdl_flagship"]["fp"] == "old" and calls == ["rdl_flagship"]
 
     # declared check passes -> re-stamped
     monkeypatch.setattr(tool, "_rows_only_check_passes", lambda n: True)
     rec = _run(tool, tmp_path, rows)
-    assert rec["rdl_flagship"] == "cur_rdl_flagship"
+    assert rec["rdl_flagship"] == {
+        "fp": "cur_rdl_flagship", "round": 17, "seq": 0,
+    }
 
 
 def test_rows_only_without_declared_check_stays_stale(
@@ -122,4 +151,4 @@ def test_rows_only_without_declared_check_stays_stale(
     rows = {"rdl_flagship": {"err": "no_oracle", "spark_rows": 10}}
     monkeypatch.setattr(tool, "_ROWS_ONLY_CHECKS", {})
     rec = _run(tool, tmp_path, rows)
-    assert rec["rdl_flagship"] == "old"
+    assert rec["rdl_flagship"]["fp"] == "old"

@@ -57,6 +57,8 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    from learn_hbase_spark.queries import verification_backlog
+
     # PLAIN session, like the external driver's — no tuned configs, so the
     # check catches any hidden dependency on learn_hbase_spark.session
     # defaults (ANSI stays at the Spark 4 default: ON).
@@ -77,6 +79,7 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    print(verification_backlog(), file=sys.stderr)
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

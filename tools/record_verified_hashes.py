@@ -1,36 +1,39 @@
-"""Record query fingerprints at VERIFICATION time — the write side of the
-edit-reverification guard in ``learn_hbase_spark/queries.py``.
+"""Record query verifications — the write side of the verification rotation
+and edit-reverification guard in ``learn_hbase_spark/queries.py``.
 
-A name in ``_DRIVER_VERIFIED`` only counts as verified while its current
-fingerprint (function source + oracle SQL + referenced package-module
-sources) matches the one recorded here. This tool is the ONLY writer of
-``learn_hbase_spark/_verified_hashes.json``, and it updates a name's hash
-only when one of these holds:
+``learn_hbase_spark/_verified_hashes.json`` holds one record per verified
+query: ``{"fp": fingerprint, "round": N, "seq": i}``, where the fingerprint
+covers the function source + oracle SQL + referenced package-module sources,
+N is the round that verified it and i its position in that round's sweep
+(the key order of ``CORRECTNESS_rNN.json``). ``queries()`` derives the
+driver's rotation from these records alone: never-recorded and stale
+(fingerprint moved) queries first, then verified ones oldest ``(round, seq)``
+first. This tool is the ONLY writer of that file. Given one round's
+CORRECTNESS file, it stamps ``fp``/``round``/``seq`` for a row only when:
 
-  (a) the current fingerprint already equals the recorded one — the code is
-      unchanged since its last verification, refreshing is a no-op;
-  (b) a CORRECTNESS_r{N}.json passed on the command line shows the name green
-      this round (rows+schema+hash match) — a fresh verification of the
-      current code;
-  (c) the name is a declared rows-only (``no_oracle``) query that the round
-      ran AND its declared pytest reference check (``_ROWS_ONLY_CHECKS``)
-      passes against the current code — the driver's rows-only row alone is
-      too weak a bar to re-stamp changed code.
+  (a) the row is green (rows+schema+hash match) — a fresh verification of
+      the current code, whether or not the name had a record before;
+  (b) the row is a declared rows-only (``no_oracle``) query that ran, its
+      fingerprint differs from its record (or it has none), AND its declared
+      pytest reference check (``_ROWS_ONLY_CHECKS``) passes against the
+      current code — the driver's rows-only row alone is too weak a bar to
+      stamp changed code.
 
-A name whose code changed since its last verification and which the given
-round did NOT re-check keeps its OLD hash, i.e. stays unverified and at the
+Every other record is left as it is: an unchanged fingerprint keeps its old
+round, and a name whose code changed since its last verification and which
+this round did NOT re-check keeps its OLD fingerprint, i.e. stays at the
 front of the next sweep's rotation. That closes the round-5 process hole
 (edited queries silently keeping a stale verified slot).
 
-Usage:
-  python tools/record_verified_hashes.py CORRECTNESS_r06.json   # per round
-  python tools/record_verified_hashes.py --init                 # bootstrap
+Usage (once per round, after the driver writes the file):
+  python tools/record_verified_hashes.py CORRECTNESS_r16.json
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -107,57 +110,43 @@ def _rows_only_ran(row: dict) -> bool:
 
 
 def main(argv: list[str]) -> None:
-    recorded = Q.recorded_fingerprints()
-    rows_only_ran: set[str] = set()
-    if argv and argv[0] == "--init":
-        # Bootstrap: trust _DRIVER_VERIFIED as-is (only valid when HEAD is a
-        # state every listed query was verified at — round-5 judge re-check).
-        fresh = set(Q._DRIVER_VERIFIED)
-    else:
-        if not argv:
-            raise SystemExit(__doc__)
-        with open(argv[0]) as fh:
-            rows = json.load(fh)
-        fresh = {n for n, row in rows.items() if _green(row)}
-        rows_only_ran = {n for n, row in rows.items() if _rows_only_ran(row)}
-        stale_green = sorted(
-            n
-            for n, row in rows.items()
-            if _green(row) and n not in Q._DRIVER_VERIFIED
-        )
-        if stale_green:
-            print(
-                "note: green names not yet in _DRIVER_VERIFIED "
-                f"(add them to the list too): {stale_green}"
-            )
+    if len(argv) != 1:
+        raise SystemExit(__doc__)
+    m = re.search(r"r(\d+)", os.path.basename(argv[0]))
+    if not m:
+        raise SystemExit(f"{argv[0]}: no round number (r<N>) in the file name")
+    rnd = int(m.group(1))
+    with open(argv[0]) as fh:
+        rows = json.load(fh)
 
-    updated, kept_stale = [], []
-    for name in Q._DRIVER_VERIFIED:
+    records = Q.recorded_verifications()
+    updated = []
+    for seq, (name, row) in enumerate(rows.items()):
         if name not in Q._QUERIES:
             continue
         cur = Q.query_fingerprint(name)
-        if name in rows_only_ran and recorded.get(name) != cur:
-            # Weaker tier: the driver only proved the query ran. Re-stamp a
+        if _green(row) or (
+            # Weaker tier: the driver only proved the query ran. Stamp a
             # CHANGED rows-only fingerprint only after its declared pytest
             # reference check passes against the current code.
-            if _rows_only_check_passes(name):
-                updated.append(name)
-                recorded[name] = cur
-            else:
-                kept_stale.append(name)
-        elif name in fresh or recorded.get(name) == cur:
-            if recorded.get(name) != cur:
-                updated.append(name)
-            recorded[name] = cur
-        else:
-            kept_stale.append(name)
+            _rows_only_ran(row)
+            and records.get(name, {}).get("fp") != cur
+            and _rows_only_check_passes(name)
+        ):
+            records[name] = {"fp": cur, "round": rnd, "seq": seq}
+            updated.append(name)
 
+    kept_stale = sorted(
+        n
+        for n, rec in records.items()
+        if n in Q._QUERIES and rec["fp"] != Q.query_fingerprint(n)
+    )
     with open(Q._VERIFIED_HASHES_PATH, "w") as fh:
-        json.dump(dict(sorted(recorded.items())), fh, indent=1, sort_keys=True)
+        json.dump(dict(sorted(records.items())), fh, indent=1, sort_keys=True)
         fh.write("\n")
     print(
-        f"recorded {len(recorded)} fingerprints "
-        f"({len(updated)} updated: {updated or '-'}; "
+        f"recorded {len(records)} verifications "
+        f"({len(updated)} stamped round {rnd}: {updated or '-'}; "
         f"{len(kept_stale)} changed-but-unverified kept stale: "
         f"{kept_stale or '-'})"
     )

@@ -41,6 +41,8 @@ def main() -> int:
 
     def timed(name: str) -> float:
         spark.sparkContext.setJobDescription(f"time:{name}")
+        # as bench.py: drop pass 1's pinned caches so every run is cold
+        spark.catalog.clearCache()
         t0 = time.time()
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         return round(time.time() - t0, 3)
