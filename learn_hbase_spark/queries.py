@@ -15,9 +15,11 @@ D=dedup/sort/limit, S=source/sink, X=scalar.
 
 from __future__ import annotations
 
+import dis
 import functools
 import glob
 import hashlib
+import importlib.util
 import inspect
 import json
 import os
@@ -144,6 +146,31 @@ def _package_module_closure(mod) -> dict[str, bytes]:
     return out
 
 
+def _relative_imports(code, package: str) -> list[tuple[str, object]]:
+    """``(name, object)`` for each ``from .<module> import <name>`` in
+    ``code``. An import made inside a function binds no global, so the
+    ``__globals__`` lookup in ``_fingerprint_parts`` cannot see it. The
+    module is imported here if it is not yet, so the answer does not
+    depend on whether the query has run."""
+    out = []
+    ins = list(dis.get_instructions(code))
+    module = None
+    for i, op in enumerate(ins):
+        if op.opname == "IMPORT_NAME":
+            level = ins[i - 2].argval if i >= 2 else 0
+            module = (
+                importlib.util.resolve_name("." * level + op.argval, package)
+                if isinstance(level, int) and level >= 1
+                else None
+            )
+        elif op.opname == "IMPORT_FROM" and module is not None:
+            obj = getattr(importlib.import_module(module), op.argval, None)
+            if obj is None:
+                obj = importlib.import_module(f"{module}.{op.argval}")
+            out.append((op.argval, obj))
+    return out
+
+
 def _fingerprint_parts(fn) -> dict[str, bytes]:
     """Everything that defines a query's answer, keyed deterministically:
     the function's own source, the FULL module source of every package
@@ -151,27 +178,35 @@ def _fingerprint_parts(fn) -> dict[str, bytes]:
     must invalidate every query built on that operator) plus that module's
     transitive intra-package imports, and the individual source of
     queries-local helpers, followed recursively (NOT all of queries.py,
-    which would invalidate every query on any edit)."""
+    which would invalidate every query on any edit). References are the
+    global names the code loads and the relative imports it makes inside
+    a function body."""
     parts = {"__self__": inspect.getsource(fn).encode()}
     seen_fns = {id(fn)}
     worklist = [fn]
     while worklist:
         f = worklist.pop()
         names: set[str] = set()
+        imported: list[tuple[str, object]] = []
         stack = [f.__code__]
         while stack:
             code = stack.pop()
             names.update(code.co_names)
+            imported += _relative_imports(code, f.__globals__["__package__"])
             stack.extend(
                 c for c in code.co_consts if isinstance(c, pytypes.CodeType)
             )
         cells = dict(zip(f.__code__.co_freevars, f.__closure__ or ()))
-        for name in sorted(names):
-            obj = (
+        refs = [
+            (
+                name,
                 cells[name].cell_contents
                 if name in cells
-                else f.__globals__.get(name)
+                else f.__globals__.get(name),
             )
+            for name in sorted(names)
+        ]
+        for name, obj in refs + imported:
             if obj is None:
                 continue
             if isinstance(obj, pytypes.ModuleType):
@@ -202,7 +237,10 @@ def query_fingerprint(name: str) -> str:
     h = hashlib.sha256()
     for key, blob in sorted(_fingerprint_parts(_QUERIES[name]).items()):
         h.update(key.encode() + b"\0" + blob + b"\0")
-    h.update(_ORACLES.get(name, "").encode())
+    # an oracle that reads scratch files embeds the checkout's absolute
+    # scratch root; hash it as a fixed token so every checkout agrees
+    oracle = _ORACLES.get(name, "").replace(_SCRATCH_ROOT, "<scratch-root>")
+    h.update(oracle.encode())
     return h.hexdigest()
 
 

@@ -21,12 +21,21 @@ Design (SURVEY §1.6, §7.1):
   rewrites to one version. At 100 TB the same design holds: appends are
   cheap blind writes, compaction is an idempotent per-partition rewrite,
   and scans prune partitions before touching data.
+- Point operations skip the window. A point ``get``, the read side of
+  ``update_index`` on a rowkey list and a small index probe's fetch read
+  cells bounded by a few rows' qualifiers × versions, so they collect the
+  raw cells in one job and resolve them on the driver
+  (``_latest_cells``). The result is a local relation: an eager snapshot,
+  as an HBase Get result is. Single-row writes build their rows as a
+  ``pyarrow.Table`` (``_local``), a JVM local relation, instead of a
+  Python RDD.
 """
 
 from __future__ import annotations
 
 import time
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -55,11 +64,6 @@ CELL_SCHEMA = StructType(
     ]
 )
 
-# put() input shape: version is stamped by the writer
-CELL_SCHEMA_NO_VERSION = StructType(
-    [f for f in CELL_SCHEMA.fields if f.name != "version"]
-)
-
 # on-disk layout = cell schema + the derived partition column(s)
 STORED_SCHEMA = StructType(
     list(CELL_SCHEMA.fields) + [StructField("prefix", StringType(), True)]
@@ -71,6 +75,26 @@ STORED_SCHEMA_BUCKETED = StructType(
 )
 
 PREFIX_LEN = 4  # the reference's grid-branch prefix width (YhCldETL.java:30)
+
+_CELL_COLS = ["rowkey", "family", "qualifier", "value"]
+
+
+def _latest_cells(cells) -> list[tuple]:
+    """Driver-side twin of ``WideTable._latest`` for a bounded cell set.
+
+    ``cells`` holds ``(rowkey, family, qualifier, value, version)`` tuples.
+    Per cell key the highest ``version`` wins; a version tie breaks on
+    ``value`` descending with nulls last, the window's exact order (Python
+    compares ``str`` by code point, which is the UTF-8 byte order Spark
+    compares strings in). A winning ``None`` is a tombstone and drops the
+    cell. Returns ``(rowkey, family, qualifier, value)`` sorted by key."""
+    best: dict[tuple, tuple] = {}
+    for rowkey, family, qualifier, value, version in cells:
+        rank = (version, value is not None, value or "")
+        key = (rowkey, family, qualifier)
+        if key not in best or rank > best[key]:
+            best[key] = rank
+    return [(*key, rank[2]) for key, rank in sorted(best.items()) if rank[1]]
 
 # Spark's partition-directory escaping (Hive FileUtils.escapePathName via
 # ExternalCatalogUtils): control chars 0x01-0x1F, DEL, and this literal set
@@ -174,6 +198,18 @@ class WideTable:
         if self.n_subpartitions:
             out = out.withColumn("bucket", self._bucket_expr(F.col("rowkey")))
         return out
+
+    def _local(self, rows, names: list[str]) -> DataFrame:
+        """Driver rows as a JVM local relation of nullable string columns,
+        built through a ``pyarrow.Table``. ``createDataFrame`` over a Python
+        list becomes a Python RDD (parallelize + applySchemaToPythonRDD), so
+        whatever consumes it runs a Python-worker job: about 340 ms for a
+        two-row write on a 4-core host, against 60 ms from the Arrow
+        table."""
+        cols = list(zip(*rows)) if rows else [()] * len(names)
+        return self.spark.createDataFrame(
+            pa.table({n: pa.array(c, pa.string()) for n, c in zip(names, cols)})
+        )
 
     # -- filesystem plumbing (portable across file:/hdfs:/s3a: schemes) -----
 
@@ -463,7 +499,9 @@ class WideTable:
             fs.delete(table._hpath(path), True)
             fs.delete(table._hpath(path + "__idx"), True)
         if not table.exists():
-            empty = spark.createDataFrame([], CELL_SCHEMA)
+            empty = table._local([], CELL_SCHEMA.names).withColumn(
+                "version", F.col("version").cast("long")
+            )
             (
                 table._stamp_partitions(empty)
                 .write.partitionBy(*table._part_cols)
@@ -545,10 +583,7 @@ class WideTable:
     def put_row(self, rowkey: str, family: str, pairs: dict[str, str]) -> None:
         """Single-row put (HBaseClient.java:113-147 overloads)."""
         rows = [(rowkey, family, q, v) for q, v in pairs.items()]
-        df = self.spark.createDataFrame(
-            rows, "rowkey string, family string, qualifier string, value string"
-        )
-        self.put(df)
+        self.put(self._local(rows, _CELL_COLS))
 
     def increment(
         self, rowkey: str, family: str, qualifier: str, delta: int = 1
@@ -563,11 +598,9 @@ class WideTable:
                 f"{family!r} is not a counter family (counters: "
                 f"{self.counters})"
             )
-        df = self.spark.createDataFrame(
-            [(rowkey, family, qualifier, str(int(delta)))],
-            CELL_SCHEMA_NO_VERSION,
+        self.put(
+            self._local([(rowkey, family, qualifier, str(int(delta)))], _CELL_COLS)
         )
-        self.put(df)
 
     def delete(self, rowkey: str, family: str, qualifier: str) -> None:
         """Delete a cell — LSM-style: append a TOMBSTONE (null value) that
@@ -575,11 +608,7 @@ class WideTable:
         The cell disappears from reads immediately; the bytes disappear at
         the next ``compact()``. Deletes are therefore as cheap as writes
         (no read-modify-write, no table scan)."""
-        df = self.spark.createDataFrame(
-            [(rowkey, family, qualifier, None)],
-            CELL_SCHEMA_NO_VERSION,
-        )
-        self.put(df)
+        self.put(self._local([(rowkey, family, qualifier, None)], _CELL_COLS))
 
     def merge(
         self,
@@ -802,17 +831,18 @@ class WideTable:
             df = df.filter(predicate)
         return df.select("rowkey", "family", "qualifier", "value")
 
-    def get(
+    def _point_read(
         self,
         rowkey: str,
         family: str | None = None,
         qualifier: str | None = None,
         now_ns: int | None = None,
     ) -> DataFrame:
-        """Point get (HBaseClient.getData, HBaseClient.java:149-158).
-        On sub-partitioned tables the bucket literal (computed driver-side
-        from the portable md5 hash — no extra Spark job) prunes the read
-        to ONE ``prefix=<p>/bucket=<b>`` directory."""
+        """The raw, unresolved cells a point get reads: TTL-live and pruned
+        to the row's prefix partition. On sub-partitioned tables the bucket
+        literal (computed driver-side from the portable md5 hash — no extra
+        Spark job) prunes the read to ONE ``prefix=<p>/bucket=<b>``
+        directory."""
         df = (
             self._ttl_live(self._cells(), now_ns)
             .filter(F.col("prefix") == rowkey[:PREFIX_LEN])
@@ -824,9 +854,31 @@ class WideTable:
             df = df.filter(F.col("family") == family)
         if qualifier:
             df = df.filter(F.col("qualifier") == qualifier)
-        return self._resolve(df).select(
-            "rowkey", "family", "qualifier", "value"
-        )
+        return df
+
+    def get(
+        self,
+        rowkey: str,
+        family: str | None = None,
+        qualifier: str | None = None,
+        now_ns: int | None = None,
+    ) -> DataFrame:
+        """Point get (HBaseClient.getData, HBaseClient.java:149-158) over
+        the cells of ``_point_read``.
+
+        One row's cells are bounded by its qualifiers × versions, so on a
+        table without counter families they are collected in ONE Spark job
+        and resolved on the driver (``_latest_cells``, the window's exact
+        order). The result is a local relation sorted by (rowkey, family,
+        qualifier): an EAGER SNAPSHOT taken at the call, as an HBase Get
+        result is — writes after the call do not show in it. Tables with
+        counter families keep the lazy Spark resolution (``_resolve``), so
+        the counter sum's long cast and overflow stay Spark's."""
+        cells = self._point_read(rowkey, family, qualifier, now_ns)
+        if self.counters:
+            return self._resolve(cells).select(*_CELL_COLS)
+        rows = cells.select(*_CELL_COLS, "version").collect()
+        return self._local(_latest_cells(rows), _CELL_COLS)
 
     def versions(
         self,
@@ -1220,6 +1272,29 @@ class WideTable:
     # only duplicates candidates, which the probe's distinct collapses.
     INDEX_DELTA_MERGE_THRESHOLD = 16
 
+    # an index probe with at most this many candidate rowkeys fetches and
+    # read-repairs them on the driver (_live_rows); more go through the
+    # broadcast semi-join. The driver path saves a shuffle per probe but
+    # pays per candidate in Python and in the rowkey IN-list, so thousands
+    # of candidates are faster on the semi-join (see CHANGES.md).
+    INDEX_PROBE_DRIVER_CAP = 100
+
+    def _live_rows(self, cells: DataFrame, rowkeys: list[str]) -> list[tuple]:
+        """The live ``(rowkey, family, qualifier, value)`` cells of a few
+        rows: one job collects their raw cells from ``cells``, pruned to
+        the rowkeys' prefix partitions, and ``_latest_cells`` resolves them
+        on the driver."""
+        if not rowkeys:
+            return []
+        prefixes = sorted({k[:PREFIX_LEN] for k in rowkeys})
+        raw = (
+            cells.filter(F.col("prefix").isin(prefixes))
+            .filter(F.col("rowkey").isin(rowkeys))
+            .select(*_CELL_COLS, "version")
+            .collect()
+        )
+        return _latest_cells(raw)
+
     def update_index(
         self,
         family: str,
@@ -1276,6 +1351,8 @@ class WideTable:
             raise ValueError(
                 f"no index for {family}:{qualifier} — build_index first"
             )
+        if not isinstance(rowkeys, DataFrame):
+            rowkeys = sorted({str(k) for k in rowkeys})
         built_ns = time.time_ns()  # BEFORE the read: conservative stamp
         cells = (
             self._cells()
@@ -1292,8 +1369,7 @@ class WideTable:
                     rowkeys.select("rowkey"), "rowkey", "left_anti"
                 )
             else:
-                claimed = sorted({str(k) for k in rowkeys})
-                uncovered = uncovered.filter(~F.col("rowkey").isin(claimed))
+                uncovered = uncovered.filter(~F.col("rowkey").isin(rowkeys))
             sample = [
                 r["rowkey"]
                 for r in uncovered.select("rowkey").distinct().limit(5).collect()
@@ -1321,22 +1397,27 @@ class WideTable:
             touched = cells.filter(F.col("prefix").isin(prefixes)).join(
                 keys, "rowkey", "left_semi"
             )
-        else:
-            keys = sorted({str(k) for k in rowkeys})
-            prefixes = sorted({k[:PREFIX_LEN] for k in keys})
-            touched = cells.filter(F.col("prefix").isin(prefixes)).filter(
-                F.col("rowkey").isin(keys)
+            fresh = (
+                self._latest(touched)
+                .select("value", "rowkey")
+                # global sort = range partition + sort; AQE sizes the post-
+                # shuffle partition count to the DELTA's bytes, so a point
+                # upsert writes one small file and a bulk load fans out
+                .sort("value")
+                .localCheckpoint()
             )
-        fresh = (
-            self._latest(touched)
-            .select("value", "rowkey")
-            # global sort = range partition + sort; AQE sizes the post-
-            # shuffle partition count to the DELTA's bytes, so a point
-            # upsert writes one small file and a bulk load fans out
-            .sort("value")
-            .localCheckpoint()
-        )
-        if fresh.take(1):
+            has_rows = bool(fresh.take(1))
+        else:
+            # a driver-held key list bounds the touched cells to those
+            # rows' versions: resolve them on the driver and write the
+            # value-sorted delta as ONE file
+            live = sorted(
+                (value, rowkey)
+                for rowkey, _, _, value in self._live_rows(cells, rowkeys)
+            )
+            fresh = self._local(live, ["value", "rowkey"]).coalesce(1)
+            has_rows = bool(live)
+        if has_rows:
             fresh.write.parquet(f"{path}/delta_{built_ns}")
         # bound the segment stack (see INDEX_DELTA_MERGE_THRESHOLD): fold
         # the deltas — never the base — into one merged, value-sorted
@@ -1450,8 +1531,11 @@ class WideTable:
     ) -> DataFrame:
         """Index-accelerated equality lookup: probe the secondary index
         for matching rowkeys (row-group-pruned on the sorted value
-        column), then fetch ONLY those rows from the main table via a
-        broadcast semi-join — never a full resolved scan.
+        column), then fetch ONLY those rows from the main table — never a
+        full resolved scan. Up to ``INDEX_PROBE_DRIVER_CAP`` candidates
+        are fetched in one job and resolved on the driver (the result is
+        then an eager snapshot, like ``get``'s); more go through a
+        broadcast semi-join.
 
         Correctness under staleness is one-sided by construction: fetched
         rows are RE-VERIFIED against the live resolved cell (read-repair),
@@ -1477,7 +1561,7 @@ class WideTable:
         other probe shape a Phoenix global index serves. Every index
         segment is value-sorted, so the range predicate prunes row groups
         on parquet min/max stats exactly like the point probe; candidates
-        fetch through the same broadcast semi-join and read-repair, so
+        fetch and read-repair as they do there, so
         staleness remains one-sided (miss-only). Half-open bounds compose
         with the stop-key successor convention the rowkey scans use
         (SURVEY X3)."""
@@ -1549,16 +1633,23 @@ class WideTable:
         # distinct: a rowkey re-upserted with the same value appears in
         # several segments; candidates stay unique for the semi-join
         keys = idx.filter(value_cond).select("rowkey").distinct()
-        fetched = (
+        cells = (
             self._cells()
             .filter(F.col("family") == family)
             .filter(F.col("qualifier") == qualifier)
-            .join(F.broadcast(keys), "rowkey")
         )
+        cap = self.INDEX_PROBE_DRIVER_CAP
+        candidates = [r["rowkey"] for r in keys.limit(cap + 1).collect()]
+        if len(candidates) <= cap:
+            # read-repair on the driver: an eager snapshot, like get
+            return self._local(
+                self._live_rows(cells, candidates), _CELL_COLS
+            ).filter(value_cond)
+        fetched = cells.join(F.broadcast(keys), "rowkey")
         # read-repair: the index narrowed the candidate set; the LIVE
         # resolved value decides membership
         return (
             self._latest(fetched)
             .filter(value_cond)
-            .select("rowkey", "family", "qualifier", "value")
+            .select(*_CELL_COLS)
         )

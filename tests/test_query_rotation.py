@@ -36,6 +36,36 @@ def test_fingerprint_covers_transitive_package_imports():
     assert "mod:learn_hbase_spark.operators.dedup" in parts
 
 
+def test_fingerprint_follows_imports_made_inside_the_query():
+    """``from .widetable import WideTable`` inside a query body binds no
+    global, so a ``__globals__`` lookup alone misses the module: an edit
+    to widetable.py would leave the index queries reading as verified."""
+    for name in ("widetable_index_lookup", "widetable_index_incremental"):
+        parts = Q._fingerprint_parts(Q._QUERIES[name])
+        assert "mod:learn_hbase_spark.widetable" in parts
+        # and that module's own imports (the shared artifact protocol)
+        assert "mod:learn_hbase_spark.storage.artifact" in parts
+    # ``from .operators import expectations as X``: a submodule import
+    parts = Q._fingerprint_parts(Q._QUERIES["expectation_report"])
+    assert "mod:learn_hbase_spark.operators.expectations" in parts
+
+
+def test_fingerprint_does_not_depend_on_the_checkout_path(monkeypatch):
+    """file_corpus_dedup's oracle reads files under the scratch root, so its
+    SQL embeds that absolute path; the fingerprint hashes it as a token,
+    so a second checkout of the same code reads as verified too."""
+    name = "file_corpus_dedup"
+    oracle, here = Q._ORACLES[name], Q._SCRATCH_ROOT
+    assert here in oracle
+    fps = set()
+    for root in ("/one/checkout/spark-warehouse", "/another/spark-warehouse"):
+        # the oracle as an import from a checkout at ``root`` builds it
+        monkeypatch.setattr(Q, "_SCRATCH_ROOT", root)
+        monkeypatch.setitem(Q._ORACLES, name, oracle.replace(here, root))
+        fps.add(Q.query_fingerprint(name))
+    assert len(fps) == 1
+
+
 def test_changed_fingerprint_moves_query_to_rotation_front(monkeypatch):
     monkeypatch.setattr(Q, "_rotation_keys", Q._rotation_keys.__wrapped__)
     names = list(Q._QUERIES)

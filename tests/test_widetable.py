@@ -1030,6 +1030,14 @@ def test_index_update_requires_build_and_accepts_dataframe_keys(
         r["rowkey"]
         for r in table.lookup_by_value("info", "yhbh", "U1").collect()
     ) == ["0401_M1", "0402_M2"]
+    # a one-shot iterable: the coverage check must not use up the keys
+    # the delta is built from (that would stamp an index missing the row)
+    table.put(_cells(spark, [("0403_M3", "info", "yhbh", "U1")]))
+    table.update_index("info", "yhbh", (k for k in ["0403_M3"]))
+    assert sorted(
+        r["rowkey"]
+        for r in table.lookup_by_value("info", "yhbh", "U1").collect()
+    ) == ["0401_M1", "0402_M2", "0403_M3"]
 
 
 def test_index_range_lookup(spark, tmp_path):
@@ -1374,3 +1382,150 @@ def test_index_probe_torn_build_refuses_loudly(spark, tmp_path):
     os.makedirs(os.path.join(idx_root, "base"))
     with pytest.raises(ValueError, match="build_index first"):
         table.lookup_by_value("info", "seg", "A")
+
+
+# ---------------------------------------------------------------------------
+# point operations resolved on the driver
+# ---------------------------------------------------------------------------
+
+
+def test_driver_resolver_equals_the_window(spark, table):
+    """``_latest_cells`` is ``_latest`` evaluated on the driver: on seeded
+    random cell sets with same-version ties, tombstones, empty strings and
+    non-ASCII values (a BMP character above the surrogates sorts BELOW an
+    astral one in UTF-8 and by code point, above it in UTF-16), both give
+    the same live cells. All sets run through one Spark job."""
+    import random
+
+    from learn_hbase_spark.widetable import CELL_SCHEMA, _latest_cells
+
+    rng = random.Random(20261019)
+    values = [None, "", "a", "b", "ab", "\u00e9", "\uffef", "\U0001F600", "\u4e2d"]
+    cells = []
+    for s in range(200):
+        for _ in range(rng.randint(1, 8)):
+            cells.append((
+                f"04{s:02d}_{rng.randint(0, 1)}",
+                rng.choice(["f", "g"]),
+                rng.choice(["q", "r", "ü"]),
+                rng.choice(values),
+                rng.randint(1, 3),  # few versions: ties are common
+            ))
+    want = sorted(
+        tuple(r)
+        for r in table._latest(spark.createDataFrame(cells, CELL_SCHEMA))
+        .select("rowkey", "family", "qualifier", "value")
+        .collect()
+    )
+    assert _latest_cells(cells) == want
+    assert any(v is None for *_, v, _ in cells)  # tombstones were drawn
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the number of
+    Spark jobs it started (read once the listener bus has drained)."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_point_ops_job_counts(spark, table):
+    """A get is one job (the raw cells, resolved on the driver), a
+    put_row one (its rows are a local relation, not a Python RDD), and
+    update_index on a rowkey list at most three (coverage check, touched
+    cells, delta write)."""
+    table.put(_cells(spark, [
+        ("0401_M1", "info", "yhbh", "U1"),
+        ("0402_M2", "info", "yhbh", "U2"),
+    ]))
+    table.build_index("info", "yhbh")
+    written = []
+    put = table.put
+    table.put = lambda cells: (written.append(cells), put(cells))
+    _, n = _jobs(spark, "wt-put-row", lambda: table.put_row(
+        "0401_M1", "info", {"yhbh": "U3", "zhbl": "Z"}
+    ))
+    assert n == 1
+    # a JVM local relation, not a Python RDD that needs a Python worker
+    plan = written[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    _, n = _jobs(spark, "wt-update-index", lambda: table.update_index(
+        "info", "yhbh", ["0401_M1"]
+    ))
+    assert n <= 3
+    got, n = _jobs(
+        spark, "wt-get", lambda: table.get("0401_M1", "info").collect()
+    )
+    assert n == 1
+    assert [(r["qualifier"], r["value"]) for r in got] == [
+        ("yhbh", "U3"), ("zhbl", "Z")
+    ]
+    assert sorted(
+        r["rowkey"] for r in table.lookup_by_value("info", "yhbh", "U3").collect()
+    ) == ["0401_M1"]
+
+
+def test_get_is_an_eager_snapshot(spark, table):
+    """Like an HBase Get result, a get's frame holds the row as of the
+    call: a later put does not show in it, and a compaction that deletes
+    the files it was read from does not break it."""
+    table.put_row("0401_M1", "info", {"q": "old"})
+    snap = table.get("0401_M1", "info", "q")
+    table.put_row("0401_M1", "info", {"q": "new"})
+    table.compact()
+    assert [r["value"] for r in snap.collect()] == ["old"]
+    assert [r["value"] for r in table.get("0401_M1").collect()] == ["new"]
+
+
+def test_index_probe_above_the_driver_cap_matches_below(
+    spark, table, monkeypatch
+):
+    """The driver fetch (candidates <= cap) and the broadcast semi-join
+    (above it) return the same rows, read-repair included."""
+    table.put(_cells(spark, [
+        (f"04{p:02d}_M{i}", "info", "seg", "A" if i % 3 else "B")
+        for p in (1, 2)
+        for i in range(6)
+    ]))
+    table.build_index("info", "seg")
+    # superseded after the build: read-repair must drop it on both paths
+    table.put_row("0401_M1", "info", {"seg": "B"})
+    table.update_index("info", "seg", ["0401_M1"])
+
+    def rows():
+        return sorted(
+            tuple(r) for r in table.lookup_by_value("info", "seg", "A").collect()
+        )
+
+    def local():
+        plan = table.lookup_by_value("info", "seg", "A")._jdf.queryExecution()
+        return plan.optimizedPlan().toString().startswith("LocalRelation")
+
+    below = rows()
+    assert local()  # 7 candidates: resolved on the driver
+    monkeypatch.setattr(WideTable, "INDEX_PROBE_DRIVER_CAP", 1)
+    above = rows()
+    assert not local()  # the broadcast semi-join
+    assert above == below
+    assert len(below) == 7 and ("0401_M1", "info", "seg", "A") not in below
+
+
+def test_get_on_a_counter_table_keeps_the_counter_sum(spark, tmp_path):
+    """Tables with counter families resolve gets in Spark: a counter reads
+    as its tombstone-bounded delta sum, next to the row's normal cells."""
+    t = WideTable.create(
+        spark, str(tmp_path / "t"), ["info", "cnt"], counters=["cnt"]
+    )
+    t.increment("0401_A", "cnt", "hits", 4)
+    t.delete("0401_A", "cnt", "hits")
+    t.increment("0401_A", "cnt", "hits", 2)
+    t.increment("0401_A", "cnt", "hits", 3)
+    t.put_row("0401_A", "info", {"q": "x"})
+    got = {(r["family"], r["qualifier"]): r["value"]
+           for r in t.get("0401_A").collect()}
+    assert got == {("cnt", "hits"): "5", ("info", "q"): "x"}
