@@ -15,20 +15,29 @@ difference between ~6 rounds and thousands (a min-label-propagation loop,
 this module's previous algorithm, measured 20 rounds on a diameter-23
 graph where large-star/small-star takes 6).
 Lineage is truncated by a two-slot parquet state per round so the plan does
-not grow with iterations; only a scalar convergence signature ever reaches
-the driver.
+not grow with iterations; only a scalar convergence signature reaches the
+driver per round. Below ``CC_DRIVER_EDGE_CAP`` canonical edges none of that
+runs: the per-round job overhead, not the data, would set the latency, so the
+edge set is collected once and closed by union-find on the driver.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import IntegralType, StringType
 
 # exact_replay pagerank's int64 safety bound: the damped update computes
 # d_pct * in_sum with d_pct < 100 and in_sum <= total mass = |V| * 1e9, so
 # the product stays below 2^63 while |V| <= (2^63-1) // (100 * 1e9) ≈ 9.2e7.
 # Module-level so tests can pin the guard without building a 9e7-node graph.
 _EXACT_REPLAY_MAX_NODES = (2**63 - 1) // (100 * 1_000_000_000)
+
+# connected_components closes up to this many canonical edges on the
+# driver; above it the star loop runs (crossover in its docstring).
+CC_DRIVER_EDGE_CAP = 100_000
 
 
 def _cc_canonical_edges(
@@ -105,71 +114,47 @@ def _cc_round(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    node_col: str = "node",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 30,
-    scratch_dir: str | None = None,
+def _min_root_labels(edges) -> dict:
+    """Union-find over ``(u, v)`` pairs with path compression, where the
+    smaller root always wins a union — so every node's label is the minimum
+    id reachable from it, the same fixpoint the star loop converges to."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {n: find(n) for n in parent}
+
+
+def _driver_labels(init: DataFrame) -> DataFrame:
+    """``(n, comp)`` for every edge-touched node: the edges collected in one
+    job, closed by :func:`_min_root_labels`, handed back as an Arrow-built
+    local relation typed like ``init``'s ids (so an empty edge set works)."""
+    labels = _min_root_labels(init.collect())
+    ids = to_arrow_type(init.schema["u"].dataType)
+    return init.sparkSession.createDataFrame(
+        pa.table({
+            "n": pa.array(list(labels), ids),
+            "comp": pa.array(list(labels.values()), ids),
+        })
+    )
+
+
+def _star_loop_labels(
+    init: DataFrame, touched: DataFrame, scratch: str, max_iter: int
 ) -> DataFrame:
-    """Label every node with the minimum node id reachable from it.
-
-    Algorithm: alternating large-star / small-star (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond") — each round rewrites
-    the EDGE set toward per-component stars rooted at the minimum id:
-
-    - large-star: per node u, connect every strictly-larger neighbor to
-      ``m = min(N(u) ∪ {u})``;
-    - small-star: orient edges high→low, connect u and its smaller
-      neighbors to their minimum.
-
-    Converges in O(log²n) rounds; a min-LABEL-propagation loop (the
-    previous implementation) needs O(diameter) rounds — measured 20
-    rounds vs 6 on the sf0.1 SemDeDup graph (diameter ≈ 23), and a
-    2000-node chain would need 2000 rounds vs ~10. At 100 TB component
-    diameters are unbounded (near-dup chains), so the round count being
-    diameter-FREE is the scale property that matters. Per round the edge
-    set shrinks toward one edge per non-root node — intermediate state
-    is O(edges), never more than the symmetrized input.
-
-    Parameters
-    ----------
-    nodes: one row per node (singletons allowed — they become their own
-        cluster); ``node_col`` must be orderable (the min is the label).
-    edges: undirected pair list; only ``src_col``/``dst_col`` are read.
-    scratch_dir: where per-round edge frames are parked. Defaults to a
-        driver-local temp dir (correct for local[*]); ON A CLUSTER PASS A
-        SHARED PATH (HDFS/object store) — executors must see it.
-
-    Returns ``(node_col, cluster_id)``.
-
-    Iteration-state note: per-round lineage is truncated by writing the
-    edge frame to parquet and reading it back — the alternating two-slot
-    scratch layout keeps disk use at two frames. Chained
-    ``localCheckpoint`` frames measured per-round wall time DOUBLING
-    from ~15 chained checkpoints (0.15s/round -> 45s/round by round 19
-    on a 2000-node graph); the parquet round-trip measured flat at
-    ~0.3s/round. Parquet also survives a driver restart and works
-    identically on a real cluster. Convergence detection is an
-    Observation (count + exact decimal hash-sum of the edge set) riding
-    the state write, so it costs no extra job; the signature is
-    collision-safe to ~2⁻⁶⁴ per round and ``max_iter`` caps the loop
-    regardless.
-
-    Only edge-TOUCHED nodes iterate: a node in no edge keeps its own id
-    forever, so singletons ride back in via one anti-join at the end
-    instead of through every round's shuffles. In a near-dup graph the
-    touched set is a small fraction of the corpus (at 100 TB: millions
-    of pair-involved docs vs billions of rows).
-    """
-    import shutil
-    import tempfile
-
-    spark = nodes.sparkSession
-    owns_scratch = scratch_dir is None
-    scratch = scratch_dir or tempfile.mkdtemp(prefix="cc_edges_")
+    """``(n, comp)`` for every edge-touched node from at most ``max_iter``
+    large-star/small-star rounds; the result reads from ``scratch``."""
+    spark = init.sparkSession
 
     def _observed(df: DataFrame):
         obs = Observation()
@@ -182,21 +167,11 @@ def connected_components(
         ), obs
 
     def _write(df: DataFrame, rnd: int) -> DataFrame:
+        # read back with the written schema: no footer-inference job
         path = f"{scratch}/r{rnd % 2}"
         df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return spark.read.schema(df.schema).parquet(path)
 
-    # canonical undirected edge set, self-loops dropped; materialized once
-    # to its own slot — the touched-node set for the output stage derives
-    # from this parquet copy lazily instead of a second checkpoint job
-    e0 = _cc_canonical_edges(edges, src_col, dst_col)
-    e0.write.mode("overwrite").parquet(f"{scratch}/init")
-    init = spark.read.parquet(f"{scratch}/init")
-    touched = (
-        init.select(F.col("u").alias("n"))
-        .union(init.select(F.col("v").alias("n")))
-        .distinct()
-    )
     e, sig = init, (-1, None)
 
     # TWO star-rounds per materialization (r15 optimization): the
@@ -239,20 +214,132 @@ def connected_components(
     roots = touched.join(assign.select("n"), "n", "left_anti").select(
         "n", F.col("n").alias("comp")
     )
-    singletons = (
-        nodes.select(F.col(node_col).alias("n"))
-        .join(touched, "n", "left_anti")
-        .select("n", F.col("n").alias("comp"))
-    )
-    out = assign.unionByName(roots).unionByName(singletons).select(
-        F.col("n").alias(node_col), F.col("comp").alias("cluster_id")
-    )
-    # the result still reads from the scratch slot: hand the rows back as
-    # a self-contained frame before dropping the temp dir
-    if owns_scratch:
-        out = out.localCheckpoint()
-        shutil.rmtree(scratch, ignore_errors=True)
-    return out
+    return assign.unionByName(roots)
+
+
+def connected_components(
+    nodes: DataFrame,
+    edges: DataFrame,
+    node_col: str = "node",
+    src_col: str = "id_a",
+    dst_col: str = "id_b",
+    max_iter: int = 30,
+    scratch_dir: str | None = None,
+) -> DataFrame:
+    """Label every node with the minimum node id reachable from it.
+
+    The canonical edge set (:func:`_cc_canonical_edges`) is written once to
+    the scratch dir, and an Observation on that write counts it at no extra
+    job. Two paths follow:
+
+    - **Driver path**, at most ``CC_DRIVER_EDGE_CAP`` canonical edges and
+      integral or (binary-collation) string ids: the edges are collected in
+      one job and closed by a min-root union-find on the driver; the labels
+      come back as an Arrow-built local relation. For these types Python's
+      order is Spark's (UTF-8 byte order is code-point order), so the labels
+      are the ones the loop converges to. Crossover on random graphs (2N
+      nodes, N edges, 4-core host, distributed vs driver): 1k edges 5.5 vs
+      0.66 s, 10k 4.2 vs 0.74 s, 100k 9.1 vs 3.0 s, 1M 23.0 vs 25.5 s — the
+      cap keeps a 3x margin. The result does not read the scratch dir.
+    - **Distributed path**, anything else: alternating large-star /
+      small-star (Kiveris et al. 2014, "Connected Components in MapReduce
+      and Beyond"). Each round rewrites the EDGE set toward per-component
+      stars rooted at the minimum id:
+
+      - large-star: per node u, connect every strictly-larger neighbor to
+        ``m = min(N(u) ∪ {u})``;
+      - small-star: orient edges high→low, connect u and its smaller
+        neighbors to their minimum.
+
+    The loop converges in O(log²n) rounds; a min-LABEL-propagation loop (an
+    earlier implementation) needs O(diameter) rounds — measured 20
+    rounds vs 6 on the sf0.1 SemDeDup graph (diameter ≈ 23), and a
+    2000-node chain would need 2000 rounds vs ~10. At 100 TB component
+    diameters are unbounded (near-dup chains), so the round count being
+    diameter-FREE is the scale property that matters. Per round the edge
+    set shrinks toward one edge per non-root node — intermediate state
+    is O(edges), never more than the symmetrized input.
+
+    Parameters
+    ----------
+    nodes: one row per node (singletons allowed — they become their own
+        cluster); ``node_col`` must be orderable (the min is the label).
+    edges: undirected pair list; only ``src_col``/``dst_col`` are read.
+    max_iter: caps the distributed loop's star-rounds only. The driver path
+        always returns the converged labelling; the loop returns the same
+        labelling whenever it converges within ``max_iter``.
+    scratch_dir: where the edge set and per-round edge frames are parked.
+        Defaults to a driver-local temp dir (correct for local[*]), removed
+        on every exit; ON A CLUSTER PASS A SHARED PATH (HDFS/object store)
+        — executors must see it.
+
+    Returns ``(node_col, cluster_id)``.
+
+    Iteration-state note: per-round lineage is truncated by writing the
+    edge frame to parquet and reading it back — the alternating two-slot
+    scratch layout keeps disk use at two frames. Chained
+    ``localCheckpoint`` frames measured per-round wall time DOUBLING
+    from ~15 chained checkpoints (0.15s/round -> 45s/round by round 19
+    on a 2000-node graph); the parquet round-trip measured flat at
+    ~0.3s/round. Parquet also survives a driver restart and works
+    identically on a real cluster. Convergence detection is an
+    Observation (count + exact decimal hash-sum of the edge set) riding
+    the state write, so it costs no extra job; the signature is
+    collision-safe to ~2⁻⁶⁴ per round and ``max_iter`` caps the loop
+    regardless.
+
+    Only edge-TOUCHED nodes are labelled by either path: a node in no edge
+    keeps its own id, so singletons ride back in via one anti-join at the
+    end. In a near-dup graph the touched set is a small fraction of the
+    corpus (at 100 TB: millions of pair-involved docs vs billions of rows).
+    """
+    import shutil
+    import tempfile
+
+    spark = nodes.sparkSession
+    owns_scratch = scratch_dir is None
+    scratch = scratch_dir or tempfile.mkdtemp(prefix="cc_edges_")
+    try:
+        # canonical undirected edge set, self-loops dropped; materialized
+        # once to its own slot and counted on the way
+        e0 = _cc_canonical_edges(edges, src_col, dst_col)
+        counted = Observation()
+        e0.observe(counted, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(f"{scratch}/init")
+        init = spark.read.schema(e0.schema).parquet(f"{scratch}/init")
+        ids = e0.schema["u"].dataType
+        on_driver = counted.get["n"] <= CC_DRIVER_EDGE_CAP and (
+            isinstance(ids, IntegralType) or ids == StringType()
+        )
+        if on_driver:
+            labelled = _driver_labels(init)
+            touched = labelled.select("n")
+        else:
+            # the touched-node set derives from the parquet copy lazily
+            # instead of a second checkpoint job
+            touched = (
+                init.select(F.col("u").alias("n"))
+                .union(init.select(F.col("v").alias("n")))
+                .distinct()
+            )
+            labelled = _star_loop_labels(init, touched, scratch, max_iter)
+        singletons = (
+            nodes.select(F.col(node_col).alias("n"))
+            .join(touched, "n", "left_anti")
+            .select("n", F.col("n").alias("comp"))
+        )
+        out = labelled.unionByName(singletons).select(
+            F.col("n").alias(node_col), F.col("comp").alias("cluster_id")
+        )
+        # the loop's result still reads from the scratch slot: hand the
+        # rows back as a self-contained frame before the temp dir goes
+        if owns_scratch and not on_driver:
+            out = out.localCheckpoint()
+        return out
+    finally:
+        if owns_scratch:
+            shutil.rmtree(scratch, ignore_errors=True)
 
 
 def dedup_decisions(

@@ -74,8 +74,26 @@ _SLOW_TESTS = {
 
 def pytest_collection_modifyitems(config, items):
     for item in items:
-        if item.name in _SLOW_TESTS:
+        # originalname: a parametrized test keeps its tier under every id
+        if item.originalname in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+@pytest.fixture
+def cc_loop(monkeypatch):
+    """Pins ``connected_components`` to the distributed star loop."""
+    from learn_hbase_spark.operators import graph
+
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 0)
+
+
+@pytest.fixture(params=["driver", "loop"])
+def cc_path(request):
+    """Runs a connected-components test on both paths: the driver
+    union-find (default cap) and the star loop (cap 0)."""
+    if request.param == "loop":
+        request.getfixturevalue("cc_loop")
+    return request.param
 
 
 @pytest.fixture(scope="session")

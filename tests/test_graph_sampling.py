@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import random
+import tempfile
+
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
-from learn_hbase_spark.operators import sampling
+from learn_hbase_spark.operators import graph, sampling
 from learn_hbase_spark.operators.graph import connected_components, dedup_decisions
 
 
@@ -15,23 +20,154 @@ def _cc(spark, nodes, edges):
     return {r["node"]: r["cluster_id"] for r in out.collect()}
 
 
-def test_cc_basic_components(spark):
+def test_cc_basic_components(spark, cc_path):
     got = _cc(spark, range(1, 8), [(1, 2), (2, 3), (5, 6)])
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
 
 
-def test_cc_long_chain_converges(spark):
+def test_cc_long_chain_converges(spark, cc_path):
     """A 9-hop chain needs multiple propagation rounds to pull every node
     down to the minimum label."""
     got = _cc(spark, range(10), [(i, i + 1) for i in range(9)])
     assert set(got.values()) == {0}
 
 
-def test_cc_singleton_only(spark):
+def test_cc_singleton_only(spark, cc_path):
     ndf = spark.createDataFrame([(7,)], "node long")
     edf = spark.createDataFrame([], "id_a long, id_b long")
     out = connected_components(ndf, edf).collect()
     assert [(r["node"], r["cluster_id"]) for r in out] == [(7, 7)]
+
+
+def _arrow_df(spark, **cols):
+    """A local relation built through Arrow: no Python-RDD job of its own."""
+    return spark.createDataFrame(pa.table(cols))
+
+
+def _random_graph(rnd, ids):
+    """Edges over ``ids`` with self-loops, duplicates and reversed copies;
+    nodes that miss some endpoints and add some untouched ids."""
+    edges = [tuple(rnd.sample(ids, 2)) for _ in range(len(ids) // 2)]
+    edges += [(x, x) for x in rnd.sample(ids, 5)]
+    edges += rnd.sample(edges, 5) + [(b, a) for a, b in rnd.sample(edges, 5)]
+    rnd.shuffle(edges)
+    nodes = rnd.sample(ids, len(ids) * 3 // 4)
+    return nodes, edges
+
+
+def _cc_both_paths(spark, monkeypatch, nodes, edges, arrow_type):
+    ndf = _arrow_df(spark, node=pa.array(nodes, arrow_type))
+    a, b = zip(*edges) if edges else ((), ())
+    edf = _arrow_df(
+        spark, id_a=pa.array(a, arrow_type), id_b=pa.array(b, arrow_type)
+    )
+    got = {}
+    for path, cap in (("driver", graph.CC_DRIVER_EDGE_CAP), ("loop", 0)):
+        monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", cap)
+        got[path] = sorted(
+            map(tuple, connected_components(ndf, edf).collect())
+        )
+    return got
+
+
+def test_cc_driver_path_equals_the_loop(spark, monkeypatch):
+    """Seeded random graphs: the driver union-find labels every node as the
+    star loop does — long ids, string ids ordered by code point (U+FFEF
+    sorts below U+1F600 in UTF-8, above it in UTF-16), and an empty edge
+    set."""
+    rnd = random.Random(15)
+    nodes, edges = _random_graph(rnd, rnd.sample(range(10**12), 120))
+    got = _cc_both_paths(spark, monkeypatch, nodes, edges, pa.int64())
+    assert got["driver"] == got["loop"]
+    assert len(got["driver"]) == len(set(nodes) | {x for e in edges for x in e})
+
+    alphabet = ["a", "z", "é", "中", "\uffef", "\U0001f600"]
+    words = sorted(
+        {"".join(rnd.choices(alphabet, k=rnd.randint(1, 3))) for _ in range(90)}
+    )
+    nodes, edges = _random_graph(rnd, words)
+    got = _cc_both_paths(spark, monkeypatch, nodes, edges, pa.string())
+    assert got["driver"] == got["loop"]
+    assert len({c for _, c in got["driver"]}) < len(got["driver"])
+
+    got = _cc_both_paths(spark, monkeypatch, [3, 1, 2], [], pa.int64())
+    assert got["driver"] == got["loop"] == [(1, 1), (2, 2), (3, 3)]
+
+
+def _cc_jobs(spark, nodes, edges, group):
+    """``connected_components`` under a job group: its result and the
+    number of Spark jobs the call started."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = connected_components(nodes, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cc_small_graph_runs_at_most_three_jobs(spark, monkeypatch):
+    """A 10-edge graph at a cap of 10: the counted edge-set write and one
+    collect, with no star rounds and no checkpoint. At a cap of 9 the same
+    graph takes the star loop."""
+    ndf = _arrow_df(spark, node=pa.array(range(20), pa.int64()))
+    edf = _arrow_df(
+        spark,
+        id_a=pa.array(range(10), pa.int64()),
+        id_b=pa.array(range(1, 11), pa.int64()),
+    )
+    expect = {n: 0 if n <= 10 else n for n in range(20)}
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 10)
+    out, jobs = _cc_jobs(spark, ndf, edf, "cc-at-cap")
+    assert jobs <= 3, f"connected_components ran {jobs} jobs"
+    assert dict(map(tuple, out.collect())) == expect
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 9)
+    out, jobs = _cc_jobs(spark, ndf, edf, "cc-above-cap")
+    assert jobs > 3, f"connected_components ran {jobs} jobs above the cap"
+    assert dict(map(tuple, out.collect())) == expect
+
+
+def test_cc_result_outlives_the_owned_scratch(
+    spark, cc_path, monkeypatch, tmp_path
+):
+    """The owned scratch dir is gone when the call returns, and the result
+    still collects: the driver path's labels are a local relation, the
+    loop's result a checkpoint."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = connected_components(
+        _arrow_df(spark, node=pa.array([1, 2, 3, 4], pa.int64())),
+        _arrow_df(
+            spark,
+            id_a=pa.array([2, 4], pa.int64()),
+            id_b=pa.array([1, 3], pa.int64()),
+        ),
+    )
+    assert list(tmp_path.iterdir()) == []
+    assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1), (3, 3), (4, 3)]
+
+
+def test_cc_removes_its_scratch_when_a_round_raises(
+    spark, monkeypatch, tmp_path
+):
+    """A failure inside either path still removes the owned scratch dir."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+
+    def boom(*_):
+        raise RuntimeError("injected")
+
+    ndf = _arrow_df(spark, node=pa.array([1, 2], pa.int64()))
+    edf = _arrow_df(
+        spark, id_a=pa.array([1], pa.int64()), id_b=pa.array([2], pa.int64())
+    )
+    for target, cap in (("_min_root_labels", None), ("_cc_round", 0)):
+        with monkeypatch.context() as mp:
+            mp.setattr(graph, target, boom)
+            if cap is not None:
+                mp.setattr(graph, "CC_DRIVER_EDGE_CAP", cap)
+            with pytest.raises(RuntimeError, match="injected"):
+                connected_components(ndf, edf)
+        assert not [p for p in tmp_path.iterdir() if p.name.startswith("cc_edges_")]
 
 
 def test_dedup_decisions_keeps_representative(spark):
@@ -142,7 +278,7 @@ def test_pagerank_deterministic_across_partitioning(spark):
     assert a == b
 
 
-def test_connected_components_long_chain_converges_fast(spark):
+def test_connected_components_long_chain_converges_fast(spark, cc_loop):
     """A 64-node path graph has diameter 63; large-star/small-star
     converges in O(log² n) rounds independent of diameter — assert both
     the answer and that convergence stayed inside a log-ish round budget
@@ -161,7 +297,7 @@ def test_connected_components_long_chain_converges_fast(spark):
     assert {r["cluster_id"] for r in got} == {0}
 
 
-def test_connected_components_shuffled_chain_diameter_free(spark):
+def test_connected_components_shuffled_chain_diameter_free(spark, cc_loop):
     """500-node chain with ids SHUFFLED along the path (the worst case
     for label propagation — the min sits at an arbitrary position and
     label chains never align with edges). max_iter=12 only clears if the
@@ -190,7 +326,9 @@ def test_connected_components_shuffled_chain_diameter_free(spark):
         assert got[node] == (m1 if i < 250 else m2)
 
 
-def test_connected_components_max_iter_cap_keeps_one_row_per_node(spark):
+def test_connected_components_max_iter_cap_keeps_one_row_per_node(
+    spark, cc_loop
+):
     """Capping max_iter below convergence must still emit exactly one
     row per node (the output min-agg guards the unconverged edge set) —
     labels may be refinable, but never duplicated or dropped."""

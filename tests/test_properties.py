@@ -135,7 +135,7 @@ def test_salted_join_is_plain_join(spark, left_keys, right_keys):
     ),
 )
 @settings(**_SETTINGS)
-def test_connected_components_match_union_find(spark, edges):
+def test_connected_components_match_union_find(spark, cc_path, edges):
     """Large-star/small-star result == classic union-find, for arbitrary
     edge multisets (self-loops, duplicates, singletons, disjoint blobs)."""
     from learn_hbase_spark.operators.graph import connected_components
