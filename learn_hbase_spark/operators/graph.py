@@ -16,28 +16,30 @@ this module's previous algorithm, measured 20 rounds on a diameter-23
 graph where large-star/small-star takes 6).
 Lineage is truncated by a two-slot parquet state per round so the plan does
 not grow with iterations; only a scalar convergence signature reaches the
-driver per round. Below ``CC_DRIVER_EDGE_CAP`` canonical edges none of that
-runs: the per-round job overhead, not the data, would set the latency, so the
-edge set is collected once and closed by union-find on the driver.
+driver per round. Below ``driver_path.CC_DRIVER_EDGE_CAP`` canonical edges
+none of that runs: the per-round job overhead, not the data, would set the
+latency, so the edge set is collected once and closed by union-find on the
+driver.
 """
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import IntegralType, StringType
+from pyspark.sql.types import (
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .. import driver_path
 
 # exact_replay pagerank's int64 safety bound: the damped update computes
 # d_pct * in_sum with d_pct < 100 and in_sum <= total mass = |V| * 1e9, so
 # the product stays below 2^63 while |V| <= (2^63-1) // (100 * 1e9) ≈ 9.2e7.
 # Module-level so tests can pin the guard without building a 9e7-node graph.
 _EXACT_REPLAY_MAX_NODES = (2**63 - 1) // (100 * 1_000_000_000)
-
-# connected_components closes up to this many canonical edges on the
-# driver; above it the star loop runs (crossover in its docstring).
-CC_DRIVER_EDGE_CAP = 100_000
 
 
 def _cc_canonical_edges(
@@ -140,12 +142,11 @@ def _driver_labels(init: DataFrame) -> DataFrame:
     job, closed by :func:`_min_root_labels`, handed back as an Arrow-built
     local relation typed like ``init``'s ids (so an empty edge set works)."""
     labels = _min_root_labels(init.collect())
-    ids = to_arrow_type(init.schema["u"].dataType)
-    return init.sparkSession.createDataFrame(
-        pa.table({
-            "n": pa.array(list(labels), ids),
-            "comp": pa.array(list(labels.values()), ids),
-        })
+    ids = init.schema["u"].dataType
+    return driver_path.local_frame(
+        init.sparkSession,
+        [list(labels), list(labels.values())],
+        StructType([StructField("n", ids), StructField("comp", ids)]),
     )
 
 
@@ -232,12 +233,12 @@ def connected_components(
     the scratch dir, and an Observation on that write counts it at no extra
     job. Two paths follow:
 
-    - **Driver path**, at most ``CC_DRIVER_EDGE_CAP`` canonical edges and
-      integral or (binary-collation) string ids: the edges are collected in
-      one job and closed by a min-root union-find on the driver; the labels
-      come back as an Arrow-built local relation. For these types Python's
-      order is Spark's (UTF-8 byte order is code-point order), so the labels
-      are the ones the loop converges to. Crossover on random graphs (2N
+    - **Driver path**, at most ``driver_path.CC_DRIVER_EDGE_CAP`` canonical
+      edges and integral or (binary-collation) string ids: the edges are
+      collected in one job and closed by a min-root union-find on the
+      driver; the labels come back as an Arrow-built local relation. For
+      these types Python's order is Spark's (UTF-8 byte order is code-point
+      order), so the labels are the ones the loop converges to. Crossover on random graphs (2N
       nodes, N edges, 4-core host, distributed vs driver): 1k edges 5.5 vs
       0.66 s, 10k 4.2 vs 0.74 s, 100k 9.1 vs 3.0 s, 1M 23.0 vs 25.5 s — the
       cap keeps a 3x margin. The result does not read the scratch dir.
@@ -309,7 +310,8 @@ def connected_components(
         ).parquet(f"{scratch}/init")
         init = spark.read.schema(e0.schema).parquet(f"{scratch}/init")
         ids = e0.schema["u"].dataType
-        on_driver = counted.get["n"] <= CC_DRIVER_EDGE_CAP and (
+        cap = driver_path.CC_DRIVER_EDGE_CAP
+        on_driver = counted.get["n"] <= cap and (
             isinstance(ids, IntegralType) or ids == StringType()
         )
         if on_driver:

@@ -16,10 +16,14 @@ tree, no Python in the loop.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import time
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from .. import driver_path
 
 # Crash-safe artifact mechanics (tombstone-first, rename-not-rmtree,
 # committed-file-less-dir-as-absent, Hadoop-FS ops) live in the shared
@@ -242,8 +246,9 @@ def _cell_assigner(cent_matrix, probes: int):
     """``mapInPandas`` body assigning each vector its ``probes`` nearest
     centroids by cosine (:func:`_topk_cells_np` — stable argsort, ties to
     the lowest cell index, the numpy argmax rule the ``ivf_cell_assign``
-    oracle mirrors). Module-level so both ``ivf_topk`` and the
-    partial-oracle query :func:`ivf_seed_cells` run the SAME kernel."""
+    oracle mirrors). Module-level so ``ivf_topk``, the partial-oracle
+    query :func:`ivf_seed_cells` and the k-means loop run the SAME
+    kernel."""
     import numpy as np
 
     def fn(batches):
@@ -326,12 +331,13 @@ def ivf_topk(
     by plain ``id % train_mod`` instead of ``xxhash64`` (the hash is
     Spark-specific, a modulus replays in any engine; both are
     deterministic 1-in-``train_mod`` rules); (b) the refined means are
-    computed by an exact DECIMAL(18,6) component-sum aggregation —
-    associative, so any partial-agg order gives the same bits in both
-    engines (the ``ivf_lloyd_update`` posture) — rounded to 6 decimals,
-    instead of the fused float partial-sum kernel whose summation order
-    is engine-local. Assignment, probing, scoring, and ranking are the
-    SAME kernels in both modes; cross-engine cosine/argmax agreement
+    computed from exact integer micro-unit component sums — associative,
+    so any partial-agg order gives the same bits in both engines — and
+    rounded half-up to 6 decimals in integer arithmetic
+    (:func:`half_up_mean`), instead of the fused float partial-sum kernel
+    whose summation order is engine-local. Assignment, probing, scoring,
+    and ranking are the SAME kernels in both modes; cross-engine
+    cosine/argmax agreement
     rests on the same separation argument the ``ivf_cell_assign`` /
     ``ann_cosine_topk`` oracles have held green on since r2. The default
     (False) keeps the zero-exchange fused float path for production.
@@ -363,14 +369,14 @@ def ivf_topk(
 
     if exact_replay:
         # engine-portable refinement (see docstring): modulus sample,
-        # assign with the shared kernel, then exact decimal component
-        # sums → rounded means. Driver pull is nlist x dim rows — the
-        # bounded k-means-centroid class.
+        # assign with the shared kernel, then exact micro-unit component
+        # sums → integer half-up means. Driver pull is nlist x dim rows —
+        # the bounded k-means-centroid class.
         sample = prepped.filter(F.pmod(F.col("_id"), F.lit(train_mod)) == 0)
         # r16: assignment + exact decimal partial sums fused into one
         # Arrow kernel (shared with _kmeans_fit) — the sample's vectors
         # never cross back to the JVM and no N×dim posexplode runs;
-        # bit-parity argued at _decimal_partial_sums.
+        # bit-parity argued at _micro_partial_sums.
         mean_rows = _exact_mean_rows(sample, cents)
         cents2 = cents.copy()  # member-less cells keep their seed row
         if mean_rows:
@@ -535,53 +541,68 @@ def kmeans_clusters(
 
     Deterministic by construction: seeds are the ``k`` lowest-id vectors,
     a FIXED ``n_iter`` Lloyd rounds (no convergence race), cosine
-    assignment with argmax-ties broken by lowest centroid index (numpy
-    argmax). Each round is one Arrow-batched assignment pass
-    (``mapInPandas``) + one per-cell mean (``applyInPandas``); only the
-    k x dim centroid matrix ever reaches the driver — bounded index
-    metadata, the corpus stays distributed. At 100 TB: k grows ~sqrt(N),
-    the assignment pass is embarrassingly parallel, and the per-round
-    driver collect is k rows regardless of corpus size.
+    assignment with argmax-ties broken by lowest centroid index
+    (:func:`_topk_cells_np`). The cast ``(id, vector)`` frame is
+    checkpointed once; an Observation on that job counts its components
+    (rows x dim), and the count picks one of two paths:
 
-    Returns ``(id_col, cluster_id, sim)`` — sim is cosine similarity to
-    the assigned (final) centroid, rounded to 6.
+    - **Driver path**, at most ``driver_path.KMEANS_DRIVER_VALUES_CAP``
+      components: the checkpoint is collected once through Arrow and every
+      round runs in numpy on the driver (:func:`_lloyd_local`). The labelled
+      corpus, each row with its centroid, goes back as an Arrow-built
+      local relation. Per-round job overhead, not the data, sets the
+      latency at this size: at sf0.1 (2,000 x 64) the loop ran 10 Spark
+      jobs.
+    - **Distributed loop**, above the cap: each round is one Arrow-batched
+      assignment pass (``mapInPandas``) plus one per-cell mean, and only
+      the k x dim centroid matrix reaches the driver. At 100 TB: k grows
+      ~sqrt(N), the assignment pass is embarrassingly parallel, and the
+      per-round driver collect is k rows regardless of corpus size.
 
-    ``exact_replay=True`` computes each round's per-cell means through an
-    exact DECIMAL(18,6) component-sum aggregation rounded to 6 decimals
-    (associative — any partial-agg order gives the same bits in every
-    engine; the ``ivf_topk(exact_replay=True)`` / ``ivf_lloyd_update``
-    posture) instead of the float ``applyInPandas`` fold, which makes the
-    FULL fixed-round run replayable as chained SQL CTEs and lets
-    ``embedding_kmeans`` carry a complete DuckDB oracle. Assignment and
-    final scoring are unchanged; cross-engine argmax/round agreement
-    rests on the same separation argument as the assignment oracles.
+    Both paths share the assignment rule, the quantizer and the mean rule,
+    so they return the same rows. Returns ``(id_col, cluster_id, sim)`` —
+    sim is cosine similarity to the assigned (final) centroid, rounded to
+    6 by a Spark expression on either path.
+
+    ``exact_replay=True`` computes each round's per-cell means from exact
+    integer micro-unit component sums (each component quantized as
+    ``cast(double AS decimal(18,6))`` does), rounded half away from zero
+    in integer arithmetic (:func:`half_up_mean`). Integer sums are
+    associative, so any partial-agg order gives the same bits in every
+    engine, and the integer rounding has no double quotient whose decimal
+    half-ties two engines could break differently. That makes the FULL
+    fixed-round run replayable as chained SQL CTEs and lets
+    ``embedding_kmeans`` carry a complete DuckDB oracle. The float mode
+    takes the id-ordered mean of each cell's members. Cross-engine
+    agreement of the argmax and the final ``round(sim, 6)`` rests on the
+    separation of the cosine scores, as in the assignment oracles.
     """
-    prepped = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.transform(
-            F.col(vec_col), lambda x: x.cast("double")
-        ).alias("_v"),
-    ).localCheckpoint()  # n_iter+1 passes read this; materialize the cast
-    # vectors once instead of re-scanning parquet + re-casting per Lloyd
-    # round (the standard cache-the-input shape for iterative ML). At
-    # cluster scale this is a persist of (id, double[]) — strictly smaller
-    # than re-decoding the source each round. NOT rebalanced (r16,
-    # measured): the per-round fused kernel is matmul-cheap, so fanning a
-    # single-split local input to core-count partitions costs more in
-    # shuffle + per-round task scheduling (5 rounds × 32 Python workers)
-    # than the parallelism returns (~4.6-5.6 s vs ~3.4 s for 5 exact
-    # rounds at sf0.1); a production scan is already well-split.
-    cents = _kmeans_fit(prepped, k, n_iter, exact_replay)
-    final = prepped.mapInPandas(
-        _kmeans_assigner(cents), schema="_id long, _v array<double>, _cell int"
-    )
-    cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
-    cent_df = corpus.sparkSession.createDataFrame(
-        cent_rows, "_cell int, _cv array<double>"
-    )
+    prepped, local = _kmeans_prepped(corpus, id_col, vec_col)
+    cents = _kmeans_fit(prepped, k, n_iter, exact_replay, local)
+    spark = corpus.sparkSession
+    if local is None:
+        final = prepped.mapInPandas(
+            _cell_assigner(cents, 1),
+            schema="_id long, _v array<double>, _cell int",
+        ).join(
+            F.broadcast(driver_path.local_frame(
+                spark,
+                [range(len(cents)), list(cents)],
+                "_cell int, _cv array<double>",
+            )),
+            "_cell",
+        )
+    else:
+        # each row carries its centroid, so the write needs no join job
+        table, _, raw = local
+        cells = _topk_cells_np(raw, cents, 1)[:, 0]
+        final = driver_path.local_frame(
+            spark,
+            [table["_id"], table["_v"], cells, list(cents[cells])],
+            "_id long, _v array<double>, _cell int, _cv array<double>",
+        )
     return (
-        final.join(F.broadcast(cent_df), "_cell")
-        .select(
+        final.select(
             F.col("_id").alias(id_col),
             F.col("_cell").alias("cluster_id"),
             F.round(cosine(F.col("_v"), F.col("_cv")), 6).alias("sim"),
@@ -589,23 +610,47 @@ def kmeans_clusters(
     )
 
 
-def _kmeans_assigner(cent_matrix):
-    """Arrow-batched max-cosine assignment against a fixed centroid
-    matrix (ties → lowest cell, the numpy argmax rule) — THE assignment
-    kernel, shared by every Lloyd round, the final labeling pass, and
-    the frozen-artifact deployment assign so they cannot drift."""
+def _kmeans_prepped(corpus: DataFrame, id_col: str, vec_col: str):
+    """``(prepped, local)`` for :func:`_kmeans_fit`. ``prepped`` is the
+    corpus as a checkpointed ``(_id, _v double[])`` frame; ``local`` is
+    ``(arrow table, ids, vectors)`` of the same rows, collected in one job,
+    when they hold at most ``driver_path.KMEANS_DRIVER_VALUES_CAP``
+    components, and None above it. The component count rides the
+    checkpoint's own job as an Observation.
+
+    The loop path reads ``prepped`` n_iter+2 times, so the cast vectors
+    are materialized once instead of re-scanning parquet and re-casting
+    per Lloyd round (the standard cache-the-input shape for iterative ML;
+    at cluster scale a persist of (id, double[]), strictly smaller than
+    re-decoding the source each round). NOT rebalanced (r16, measured):
+    the per-round fused kernel is matmul-cheap, so fanning a single-split
+    local input to core-count partitions costs more in shuffle and
+    per-round task scheduling than the parallelism returns (~4.6-5.6 s vs
+    ~3.4 s for 5 exact rounds at sf0.1); a production scan is already
+    well-split."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    def fn(batches):
-        for pdf in batches:
-            m = _np_norm_rows(
-                np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-            )
-            pdf = pdf[["_id", "_v"]].copy()
-            pdf["_cell"] = np.argmax(m @ cent_matrix.T, axis=1).astype("int32")
-            yield pdf
-
-    return fn
+    counted = Observation()
+    prepped = (
+        corpus.select(
+            F.col(id_col).alias("_id"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+        )
+        .observe(counted, F.sum(F.size("_v")).alias("values"))
+        .localCheckpoint()
+    )
+    if (counted.get["values"] or 0) > driver_path.KMEANS_DRIVER_VALUES_CAP:
+        return prepped, None
+    table = prepped.toArrow()
+    vecs = table["_v"].combine_chunks()
+    lens = pc.list_value_length(vecs)
+    if vecs.null_count or pc.min_max(lens)["min"] != pc.min_max(lens)["max"]:
+        raise ValueError("k-means needs one non-null vector length per row")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    raw = flat.astype(np.float64).reshape(len(vecs), -1)
+    ids = table["_id"].to_numpy()
+    return prepped, (table, ids, raw)
 
 
 def _micro_quantize(x):
@@ -654,25 +699,22 @@ def _micro_quantize(x):
     return out.astype(np.int64), valid
 
 
-def _decimal_partial_sums(cent_matrix):
+def _micro_partial_sums(cent_matrix):
     """``mapInPandas`` body FUSING the Lloyd assignment pass with the
-    exact decimal(18,6) per-(cell, dim) component sums (guide §2.3/§4.2:
-    aggregate before anything crosses a boundary; ship partials, not
-    payloads). Replaces the r13-r15 shape
-    ``assign-kernel → N×dim posexplode → JVM partial agg`` — the raw
-    vectors no longer cross Python→JVM at all and the exchange carries
-    ≤ tasks × k × dim tiny partial rows. Decimal addition is exact, so
-    ANY partial grouping reproduces the old aggregate bit-for-bit (the
+    exact per-(cell, dim) component sums in int64 micro-units (guide
+    §2.3/§4.2: aggregate before anything crosses a boundary; ship
+    partials, not payloads): the raw vectors never cross Python→JVM and
+    the exchange carries ≤ tasks × k × dim tiny partial rows. Integer
+    addition is exact, so ANY partial grouping gives the same totals (the
     associativity the exact_replay contract is built on); per-element
-    quantization parity with Spark's cast is :func:`_micro_quantize`."""
+    quantization parity with Spark's ``cast(double AS decimal(18,6))`` is
+    :func:`_micro_quantize`."""
     import numpy as np
     import pandas as pd
 
     k, dim = cent_matrix.shape
 
     def fn(batches):
-        from decimal import Decimal
-
         sums = np.zeros((k, dim), dtype=np.int64)
         counts = np.zeros(k, dtype=np.int64)
         for pdf in batches:
@@ -689,57 +731,82 @@ def _decimal_partial_sums(cent_matrix):
         touched = np.nonzero(counts)[0]
         if not len(touched):
             return
-        rows = [
-            (int(c), int(d), Decimal(int(sums[c, d])).scaleb(-6),
-             int(counts[c]))
-            for c in touched
-            for d in range(dim)
-        ]
-        yield pd.DataFrame(rows, columns=["_cell", "_dim", "_s", "_n"])
+        yield pd.DataFrame({
+            "_cell": np.repeat(touched, dim).astype("int32"),
+            "_dim": np.tile(np.arange(dim, dtype="int32"), len(touched)),
+            "_s": sums[touched].ravel(),
+            "_n": np.repeat(counts[touched], dim),
+        })
 
     return fn
+
+
+def half_up_mean(s: Column, n: Column) -> Column:
+    """The mean of an exact micro-unit sum ``s`` (int64 units of 1e-6)
+    over ``n`` members, rounded half away from zero to 6 decimals in
+    integer arithmetic: ``sign(s) * ((2|s| + n) div 2n) / 1e6``.
+
+    Rounding the double quotient instead (``round(double(s)/n, 6)``) is not
+    portable: a mean such as 0.712630 / 20 = 0.0356315 is an exact decimal
+    half-tie, its double quotient sits just below the tie, and Spark (which
+    rounds the double's decimal string) and DuckDB (which scales first)
+    round it in opposite directions. A quotient that is not a tie gives
+    the same double as before. :func:`_half_up_mean_np` is the numpy twin,
+    and the DuckDB oracles spell the same formula."""
+    q = F.call_function("div", 2 * F.abs(s) + n, 2 * n)
+    return F.when(s < 0, -q).otherwise(q) / F.lit(1e6)
+
+
+def _half_up_mean_np(s, n):
+    """:func:`half_up_mean` over int64 numpy arrays."""
+    import numpy as np
+
+    q = (2 * np.abs(s) + n) // (2 * n)
+    return np.where(s < 0, -q, q) / 1e6
 
 
 def _exact_mean_rows(frame, cent_matrix):
     """Driver-collected ``(cell, dim, mean)`` rows of one exact-replay
     Lloyd round over a prepped ``(_id, _v)`` frame — the shared
-    round body of :func:`_kmeans_fit` and :func:`ivf_topk`'s
-    ``exact_replay`` refinement. Bit-parity with the former
-    posexplode + decimal-cast aggregate is argued at
-    :func:`_decimal_partial_sums`; the final expression (exact decimal
-    total → double → round 6) is unchanged."""
+    round body of :func:`_kmeans_fit`'s loop and :func:`ivf_topk`'s
+    ``exact_replay`` refinement: fused assignment and micro-unit partial
+    sums (:func:`_micro_partial_sums`), summed per (cell, dim), then the
+    integer half-up mean (:func:`half_up_mean`)."""
     return (
         frame.mapInPandas(
-            _decimal_partial_sums(cent_matrix),
-            schema="_cell int, _dim int, _s decimal(28,6), _n long",
+            _micro_partial_sums(cent_matrix),
+            schema="_cell int, _dim int, _s long, _n long",
         )
         .groupBy("_cell", "_dim")
         .agg(F.sum("_s").alias("_s"), F.sum("_n").alias("_n"))
         .select(
-            "_cell",
-            "_dim",
-            F.round(F.col("_s").cast("double") / F.col("_n"), 6).alias("_m"),
+            "_cell", "_dim", half_up_mean(F.col("_s"), F.col("_n")).alias("_m")
         )
         .collect()
     )
 
 
-def _kmeans_fit(prepped, k: int, n_iter: int, exact_replay: bool):
+def _kmeans_fit(prepped, k: int, n_iter: int, exact_replay: bool, local=None):
     """The deterministic Lloyd loop over a prepped ``(_id, _v)`` frame:
     k lowest-id seeds, ``n_iter`` fixed rounds, per-round driver state =
     the k×dim centroid matrix. Shared by :func:`kmeans_clusters` (which
     labels the corpus with the result) and :func:`freeze_kmeans` (which
-    persists it as the deployment artifact)."""
+    persists it as the deployment artifact). With ``local`` (the
+    driver-held rows from :func:`_kmeans_prepped`) the rounds run in
+    numpy (:func:`_lloyd_local`); without it, as Spark jobs."""
     import numpy as np
     import pandas as pd
 
-    def _norm_rows(m: "np.ndarray") -> "np.ndarray":
-        return _np_norm_rows(m)
+    if local is not None:
+        _, ids, raw = local
+        return _lloyd_local(ids, raw, k, n_iter, exact_replay)
 
     seeds = (
         prepped.orderBy(F.col("_id").asc()).limit(k).toPandas()["_v"]
     )
-    cents = _norm_rows(np.stack([np.asarray(v, dtype=np.float64) for v in seeds]))
+    cents = _np_norm_rows(
+        np.stack([np.asarray(v, dtype=np.float64) for v in seeds])
+    )
 
     schema = "_id long, _v array<double>, _cell int"
 
@@ -753,34 +820,69 @@ def _kmeans_fit(prepped, k: int, n_iter: int, exact_replay: bool):
     for _ in range(n_iter):
         new_cents = cents.copy()
         if exact_replay:
-            # decimal-exact component means (see docstring); driver pull
-            # is k x dim rows — the same bounded centroid class. r16:
-            # assignment and the partial sums are FUSED into one Arrow
-            # kernel (_decimal_partial_sums) — the vectors never cross
-            # back to the JVM and the per-round exchange carries only
-            # tasks × k × dim partial rows (was: N×dim posexplode).
+            # exact integer component means (see kmeans_clusters); the
+            # driver pull is k x dim rows — the bounded centroid class
             mean_rows = _exact_mean_rows(prepped, cents)
             if mean_rows:
                 raw = np.zeros_like(cents)
                 for r in mean_rows:
                     raw[r["_cell"], r["_dim"]] = r["_m"]
                 touched = sorted({int(r["_cell"]) for r in mean_rows})
-                new_cents[touched] = _norm_rows(raw[touched])
+                new_cents[touched] = _np_norm_rows(raw[touched])
         else:
             assigned = prepped.mapInPandas(
-                _kmeans_assigner(cents), schema=schema
+                _cell_assigner(cents, 1), schema=schema
             )
             means = (
                 assigned.groupBy("_cell")
                 .applyInPandas(_cell_mean, schema="_cell int, _v array<double>")
                 .toPandas()  # bounded: k rows
             )
-            new_cents[means["_cell"].to_numpy()] = _norm_rows(
+            new_cents[means["_cell"].to_numpy()] = _np_norm_rows(
                 np.stack([np.asarray(v) for v in means["_v"]])
             )
         cents = new_cents  # empty cells keep their previous centroid
 
     return cents
+
+
+def _lloyd_local(ids, raw, k: int, n_iter: int, exact_replay: bool):
+    """:func:`_kmeans_fit`'s rounds over driver-held ``(ids, vectors)``,
+    giving the loop path's bits: the same seeds (the k lowest ids), the
+    same assignment rule (:func:`_topk_cells_np`), and per mode the same
+    mean — integer micro-unit sums (:func:`_micro_quantize`) under
+    :func:`_half_up_mean_np`, or the id-ordered float mean of each
+    cell's members, as ``_cell_mean`` takes it."""
+    import numpy as np
+
+    if not len(ids):
+        raise ValueError("k-means over an empty corpus")
+    raw = raw[np.argsort(ids, kind="stable")]
+    cents = _np_norm_rows(raw[:k])
+    if exact_replay:
+        micros, valid = _micro_quantize(raw)
+        micros[~valid] = 0  # NULL-parity: sum skips, count doesn't
+    for _ in range(n_iter):
+        cells = _topk_cells_np(raw, cents, 1)[:, 0]
+        counts = np.bincount(cells, minlength=len(cents))
+        touched = np.nonzero(counts)[0]
+        if exact_replay:
+            sums = np.stack([micros[cells == c].sum(axis=0) for c in touched])
+            means = _half_up_mean_np(sums, counts[touched, None])
+        else:
+            means = np.stack([raw[cells == c].mean(axis=0) for c in touched])
+        cents = cents.copy()  # empty cells keep their previous centroid
+        cents[touched] = _np_norm_rows(means)
+    return cents
+
+
+@functools.lru_cache(maxsize=None)
+def _code_digest() -> str:
+    """A digest of this module's source, read once per process. Freeze
+    stamps carry it, so an artifact built by other trainer code reads as
+    stale instead of serving centroids this code would not produce."""
+    with open(__file__, "rb") as f:
+        return hashlib.sha256(f.read()).hexdigest()[:16]
 
 
 def freeze_kmeans(
@@ -801,7 +903,8 @@ def freeze_kmeans(
     (:func:`kmeans_assign_frozen`) instead of re-running Lloyd.
 
     Layout: ``{path}/centroids`` (cell, c) + a ``{path}/_src`` text
-    sidecar recording the corpus fingerprint and train params, written
+    sidecar recording the corpus fingerprint, the train params and the
+    digest of the code that trained them (:func:`_code_digest`), written
     AFTER the table (validity marker last — a torn rewrite reads stale
     and refreezes; the sidecar is deleted before the rewrite so a stale
     marker can never vouch for mixed halves). Fresh ⇒ skip. An empty
@@ -820,7 +923,7 @@ def freeze_kmeans(
     )
     stamp = (
         f"{src}|k={k}|n={n_iter}|replay={int(bool(exact_replay))}"
-        f"|id={id_col}|vec={vec_col}"
+        f"|id={id_col}|vec={vec_col}|code={_code_digest()}"
         if src
         else ""
     )
@@ -828,14 +931,10 @@ def freeze_kmeans(
     if stamp and read_text_sidecar(spark, marker) == stamp:
         return
     fs_delete(spark, marker)
-    prepped = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    ).localCheckpoint()
-    cents = _kmeans_fit(prepped, k, n_iter, exact_replay)
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, c array<double>",
+    prepped, local = _kmeans_prepped(corpus, id_col, vec_col)
+    cents = _kmeans_fit(prepped, k, n_iter, exact_replay, local)
+    driver_path.local_frame(
+        spark, [range(len(cents)), list(cents)], "cell int, c array<double>"
     ).write.mode("overwrite").parquet(f"{path}/centroids")
     write_text_sidecar(spark, marker, stamp)
 

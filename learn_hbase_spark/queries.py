@@ -4057,9 +4057,20 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_topk(q, emb, k=10)
 
 
+def _half_up_mean_sql(total: str, n: str) -> str:
+    """DuckDB twin of ``similarity.half_up_mean``: the mean of the exact
+    DECIMAL(18,6) sum ``total`` over ``n`` rows, rounded half away from
+    zero to 6 decimals in integer micro-units. Rounding the double
+    quotient instead splits the engines on exact decimal half-ties (a
+    cell mean of 0.712630 / 20 = 0.0356315 rounds to 0.035631 in Spark
+    and 0.035632 in DuckDB)."""
+    s = f"CAST({total} * 1000000 AS BIGINT)"
+    return f"(sign({s}) * ((2 * abs({s}) + {n}) // (2 * {n}))) / 1e6"
+
+
 @_register(
     "ann_ivf_topk",
-    """
+    f"""
     WITH iseeds AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS cell, c
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c
@@ -4090,8 +4101,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            unnest(generate_series(1, len(e.embedding))) AS t(i)
     ),
     means AS (
-      SELECT cell, dim,
-             round(CAST(sum(c) AS DOUBLE) / count(*), 6) AS m
+      SELECT cell, dim, {_half_up_mean_sql("sum(c)", "count(*)")} AS m
       FROM comps GROUP BY cell, dim
     ),
     refined AS (
@@ -4155,8 +4165,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells. PROMOTED to a full oracle in r13 (VERDICT r12 #4) via
     ``ivf_topk(exact_replay=True)``: the refinement chains as CTEs —
     seed-assign the ``vec_id % 4`` training sample (the
-    ``ivf_cell_assign`` argmax), DECIMAL-exact per-cell component means
-    rounded to 6 decimals (the ``ivf_lloyd_update`` posture), reassign
+    ``ivf_cell_assign`` argmax), DECIMAL-exact per-cell component sums
+    with an integer half-up mean (``_half_up_mean_sql``), reassign
     corpus + queries under the refined centroids, then exact-cosine rank
     over the probed cells (the ``ann_cosine_topk`` final stage). Cells
     that lost every sampled member keep their seed (the COALESCE).
@@ -4176,13 +4186,18 @@ def _kmeans_replay_ctes(
     fixed ``n_rounds`` Lloyd rounds — the pagerank/BPE/ann_ivf_topk
     promotion recipe applied to the k-means fixpoint: each round is
     (assign by max-cosine, ties to lowest cell) → (per-cell per-dim
-    DECIMAL(18,6)-exact mean, rounded to 6) → (COALESCE carries empty
-    cells' previous centroid forward). Every round's assignment is
-    integer, every mean is an exact decimal sum — the only cross-engine
-    float surfaces are the cosine argmaxes and the final round(sim, 6),
-    both covered by the separation argument the assignment oracles hold
-    green on. Produces ``cent0..cent{n}``; the caller scores against
+    DECIMAL(18,6)-exact sum, integer half-up mean ``_half_up_mean_sql``)
+    → (COALESCE carries empty cells' previous centroid forward). Every
+    round's assignment is integer and every mean is integer arithmetic on
+    an exact decimal sum, so no engine rounds a double quotient. The only
+    cross-engine float surfaces are the cosine argmaxes and the final
+    round(sim, 6), both covered by the separation argument the
+    assignment oracles hold green on. Produces ``cent0..cent{n}``; the caller scores against
     ``cent{n_rounds}``."""
+    mean = _half_up_mean_sql(
+        "sum(CAST((CAST(e.embedding AS DOUBLE[]))[i] AS DECIMAL(18,6)))",
+        "count(*)",
+    )
     parts = [f"""
     cent0 AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS cell, c
@@ -4208,10 +4223,7 @@ def _kmeans_replay_ctes(
       ) WHERE rn = 1
     ),
     m{r} AS (
-      SELECT a.cell, i - 1 AS dim,
-             round(CAST(sum(CAST((CAST(e.embedding AS DOUBLE[]))[i]
-                                 AS DECIMAL(18,6))) AS DOUBLE)
-                   / count(*), 6) AS m
+      SELECT a.cell, i - 1 AS dim, {mean} AS m
       FROM a{r} a
       JOIN {src} e USING (vec_id),
            unnest(generate_series(1, len(e.embedding))) AS t(i)
@@ -4254,10 +4266,10 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     balanced sampling for curation. PROMOTED to a full oracle in r13
     (VERDICT r12 #4 stretch) via ``exact_replay=True``: the pinned 5
     Lloyd rounds chain as CTEs (``_kmeans_replay_ctes`` — integer
-    assignments, DECIMAL-exact rounded means, COALESCE empty-cell
-    carry), and the final pass emits (cluster_id, round(sim, 6)) — the
-    ``ann_ivf_topk`` recipe at k-means depth. The float-``applyInPandas``
-    refinement stays the production default, agreement with a
+    assignments, DECIMAL-exact sums with integer half-up means, COALESCE
+    empty-cell carry), and the final pass emits (cluster_id,
+    round(sim, 6)) — the ``ann_ivf_topk`` recipe at k-means depth. The
+    float refinement stays the production default, agreement with a
     single-node numpy reference pytest-pinned (tests/test_llm_ops.py)."""
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.kmeans_clusters(emb, k=8, n_iter=5, exact_replay=True)
@@ -4347,7 +4359,7 @@ def kmeans_assign_iter1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "kmeans_update_iter1",
-    """
+    f"""
     WITH seeds AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS cell, c
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c
@@ -4379,7 +4391,7 @@ def kmeans_assign_iter1(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT cluster_id, CAST(dim AS INT) AS dim,
            CAST(count(*) AS BIGINT) AS n_members,
            CAST(sum(c) AS DOUBLE) AS comp_sum,
-           round(CAST(sum(c) AS DOUBLE) / count(*), 6) AS mean_c
+           {_half_up_mean_sql("sum(c)", "count(*)")} AS mean_c
     FROM comps GROUP BY cluster_id, dim
     """,
 )
@@ -4391,7 +4403,8 @@ def kmeans_update_iter1(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid is the per-dimension mean of its members, computed through
     exact DECIMAL(18,6) component sums — associative, so both engines
     produce identical bits without replaying the production kernel's
-    float fold order. Production `kmeans_clusters` additionally
+    float fold order — and an integer half-up mean
+    (``similarity.half_up_mean``). Production `kmeans_clusters` additionally
     re-normalizes the refined rows; that stays under the NumPy-reference
     pytest; membership × mean math is what this pins."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -4413,9 +4426,9 @@ def kmeans_update_iter1(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dim").cast("int").alias("dim"),
         "n_members",
         F.col("_s").cast("double").alias("comp_sum"),
-        F.round(F.col("_s").cast("double") / F.col("n_members"), 6).alias(
-            "mean_c"
-        ),
+        similarity.half_up_mean(
+            (F.col("_s") * 1000000).cast("long"), F.col("n_members")
+        ).alias("mean_c"),
     )
 
 
@@ -4560,7 +4573,7 @@ def ivf_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ivf_lloyd_update",
-    """
+    f"""
     WITH seeds AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INT) - 1 AS cell, c
       FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS c
@@ -4592,7 +4605,7 @@ def ivf_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT cell, CAST(dim AS INT) AS dim,
            CAST(count(*) AS BIGINT) AS n_members,
            CAST(sum(c) AS DOUBLE) AS comp_sum,
-           round(CAST(sum(c) AS DOUBLE) / count(*), 6) AS mean_c
+           {_half_up_mean_sql("sum(c)", "count(*)")} AS mean_c
     FROM comps GROUP BY cell, dim
     """,
 )
@@ -4606,8 +4619,13 @@ def ivf_lloyd_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregation order gives the same bits — the
     ``linear_fit_by_type`` posture), so both engines produce identical
     sums without replaying the production kernel's float fold order.
-    Double→decimal rounding is engine-safe because no binary double sits
-    exactly on a decimal half-tie at scale 6. Production ``ivf_topk``
+    Double→decimal casts are engine-safe because no binary double sits
+    exactly on a decimal half-tie at scale 6. A rounded QUOTIENT of those
+    sums is not: sum / n often is an exact decimal half-tie that double
+    division misses, and the engines round it differently. So the mean is
+    integer half-up arithmetic on the micro-unit sum
+    (``similarity.half_up_mean``, oracle ``_half_up_mean_sql``). Production
+    ``ivf_topk``
     additionally samples members (engine-local xxhash64 gate) and
     re-normalizes touched rows — those stay under the recall pytest; the
     membership and mean math are what this query pins."""
@@ -4628,9 +4646,9 @@ def ivf_lloyd_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("dim").cast("int").alias("dim"),
         "n_members",
         F.col("_s").cast("double").alias("comp_sum"),
-        F.round(F.col("_s").cast("double") / F.col("n_members"), 6).alias(
-            "mean_c"
-        ),
+        similarity.half_up_mean(
+            (F.col("_s") * 1000000).cast("long"), F.col("n_members")
+        ).alias("mean_c"),
     )
 
 

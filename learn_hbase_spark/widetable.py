@@ -35,7 +35,6 @@ from __future__ import annotations
 
 import time
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -44,6 +43,7 @@ from pyspark.sql import functions as F
 # read as ABSENT (interrupted delete, crashed write's _temporary remnant);
 # any other read failure re-raises loud; all moves/deletes go through the
 # Hadoop FS API so they work on cluster URIs.
+from . import driver_path
 from .storage.artifact import hadoop_fs, hadoop_path, sweep_trash
 from .storage.artifact import try_parquet as _try_parquet
 from pyspark.sql.types import (
@@ -200,16 +200,11 @@ class WideTable:
         return out
 
     def _local(self, rows, names: list[str]) -> DataFrame:
-        """Driver rows as a JVM local relation of nullable string columns,
-        built through a ``pyarrow.Table``. ``createDataFrame`` over a Python
-        list becomes a Python RDD (parallelize + applySchemaToPythonRDD), so
-        whatever consumes it runs a Python-worker job: about 340 ms for a
-        two-row write on a 4-core host, against 60 ms from the Arrow
-        table."""
+        """Driver rows as a JVM local relation of nullable string columns
+        (:func:`driver_path.local_frame`)."""
         cols = list(zip(*rows)) if rows else [()] * len(names)
-        return self.spark.createDataFrame(
-            pa.table({n: pa.array(c, pa.string()) for n, c in zip(names, cols)})
-        )
+        schema = StructType([StructField(n, StringType()) for n in names])
+        return driver_path.local_frame(self.spark, cols, schema)
 
     # -- filesystem plumbing (portable across file:/hdfs:/s3a: schemes) -----
 
@@ -1272,13 +1267,6 @@ class WideTable:
     # only duplicates candidates, which the probe's distinct collapses.
     INDEX_DELTA_MERGE_THRESHOLD = 16
 
-    # an index probe with at most this many candidate rowkeys fetches and
-    # read-repairs them on the driver (_live_rows); more go through the
-    # broadcast semi-join. The driver path saves a shuffle per probe but
-    # pays per candidate in Python and in the rowkey IN-list, so thousands
-    # of candidates are faster on the semi-join (see CHANGES.md).
-    INDEX_PROBE_DRIVER_CAP = 100
-
     def _live_rows(self, cells: DataFrame, rowkeys: list[str]) -> list[tuple]:
         """The live ``(rowkey, family, qualifier, value)`` cells of a few
         rows: one job collects their raw cells from ``cells``, pruned to
@@ -1532,10 +1520,10 @@ class WideTable:
         """Index-accelerated equality lookup: probe the secondary index
         for matching rowkeys (row-group-pruned on the sorted value
         column), then fetch ONLY those rows from the main table — never a
-        full resolved scan. Up to ``INDEX_PROBE_DRIVER_CAP`` candidates
-        are fetched in one job and resolved on the driver (the result is
-        then an eager snapshot, like ``get``'s); more go through a
-        broadcast semi-join.
+        full resolved scan. Up to ``driver_path.INDEX_PROBE_DRIVER_CAP``
+        candidates are fetched in one job and resolved on the driver (the
+        result is then an eager snapshot, like ``get``'s); more go through
+        a broadcast semi-join.
 
         Correctness under staleness is one-sided by construction: fetched
         rows are RE-VERIFIED against the live resolved cell (read-repair),
@@ -1638,7 +1626,7 @@ class WideTable:
             .filter(F.col("family") == family)
             .filter(F.col("qualifier") == qualifier)
         )
-        cap = self.INDEX_PROBE_DRIVER_CAP
+        cap = driver_path.INDEX_PROBE_DRIVER_CAP
         candidates = [r["rowkey"] for r in keys.limit(cap + 1).collect()]
         if len(candidates) <= cap:
             # read-repair on the driver: an eager snapshot, like get

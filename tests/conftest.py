@@ -82,9 +82,9 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture
 def cc_loop(monkeypatch):
     """Pins ``connected_components`` to the distributed star loop."""
-    from learn_hbase_spark.operators import graph
+    from learn_hbase_spark import driver_path
 
-    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 0)
+    monkeypatch.setattr(driver_path, "CC_DRIVER_EDGE_CAP", 0)
 
 
 @pytest.fixture(params=["driver", "loop"])
@@ -93,6 +93,17 @@ def cc_path(request):
     union-find (default cap) and the star loop (cap 0)."""
     if request.param == "loop":
         request.getfixturevalue("cc_loop")
+    return request.param
+
+
+@pytest.fixture(params=["driver", "loop"])
+def km_path(request, monkeypatch):
+    """Runs a k-means test on both paths: numpy Lloyd rounds on the driver
+    (default cap) and the distributed loop (cap 0)."""
+    from learn_hbase_spark import driver_path
+
+    if request.param == "loop":
+        monkeypatch.setattr(driver_path, "KMEANS_DRIVER_VALUES_CAP", 0)
     return request.param
 
 

@@ -9,6 +9,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from learn_hbase_spark import driver_path
 from learn_hbase_spark.operators import graph, sampling
 from learn_hbase_spark.operators.graph import connected_components, dedup_decisions
 
@@ -62,8 +63,8 @@ def _cc_both_paths(spark, monkeypatch, nodes, edges, arrow_type):
         spark, id_a=pa.array(a, arrow_type), id_b=pa.array(b, arrow_type)
     )
     got = {}
-    for path, cap in (("driver", graph.CC_DRIVER_EDGE_CAP), ("loop", 0)):
-        monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", cap)
+    for path, cap in (("driver", driver_path.CC_DRIVER_EDGE_CAP), ("loop", 0)):
+        monkeypatch.setattr(driver_path, "CC_DRIVER_EDGE_CAP", cap)
         got[path] = sorted(
             map(tuple, connected_components(ndf, edf).collect())
         )
@@ -118,11 +119,11 @@ def test_cc_small_graph_runs_at_most_three_jobs(spark, monkeypatch):
         id_b=pa.array(range(1, 11), pa.int64()),
     )
     expect = {n: 0 if n <= 10 else n for n in range(20)}
-    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 10)
+    monkeypatch.setattr(driver_path, "CC_DRIVER_EDGE_CAP", 10)
     out, jobs = _cc_jobs(spark, ndf, edf, "cc-at-cap")
     assert jobs <= 3, f"connected_components ran {jobs} jobs"
     assert dict(map(tuple, out.collect())) == expect
-    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 9)
+    monkeypatch.setattr(driver_path, "CC_DRIVER_EDGE_CAP", 9)
     out, jobs = _cc_jobs(spark, ndf, edf, "cc-above-cap")
     assert jobs > 3, f"connected_components ran {jobs} jobs above the cap"
     assert dict(map(tuple, out.collect())) == expect
@@ -164,7 +165,7 @@ def test_cc_removes_its_scratch_when_a_round_raises(
         with monkeypatch.context() as mp:
             mp.setattr(graph, target, boom)
             if cap is not None:
-                mp.setattr(graph, "CC_DRIVER_EDGE_CAP", cap)
+                mp.setattr(driver_path, "CC_DRIVER_EDGE_CAP", cap)
             with pytest.raises(RuntimeError, match="injected"):
                 connected_components(ndf, edf)
         assert not [p for p in tmp_path.iterdir() if p.name.startswith("cc_edges_")]

@@ -157,9 +157,13 @@ def _numpy_lloyd(rows, k, n_iter):
     return dict(zip(ids, final.tolist()))
 
 
-def test_kmeans_matches_numpy_reference(spark, vectors):
-    from learn_hbase_spark.operators.similarity import kmeans_clusters
+@pytest.mark.parametrize("exact", [False, True])
+def test_kmeans_matches_numpy_reference(spark, vectors, km_path, exact):
+    from functools import partial
 
+    from learn_hbase_spark.operators import similarity
+
+    kmeans_clusters = partial(similarity.kmeans_clusters, exact_replay=exact)
     got = {
         r["vec_id"]: r["cluster_id"]
         for r in kmeans_clusters(vectors, k=4, n_iter=3).collect()
@@ -1774,7 +1778,10 @@ def test_freeze_sq8_artifact_lifecycle(spark, vectors, tmp_path):
         similarity.sq8_assign_frozen(corpus, path)
 
 
-def test_freeze_kmeans_artifact_lifecycle(spark, vectors, tmp_path):
+@pytest.mark.parametrize("exact", [False, True])
+def test_freeze_kmeans_artifact_lifecycle(
+    spark, vectors, tmp_path, km_path, exact
+):
     """Frozen clustering artifact: assignments from the written centroids
     equal kmeans_clusters' labels on the same corpus; a fresh artifact
     skips retraining (centroid file mtimes unchanged); a corpus change
@@ -1787,10 +1794,14 @@ def test_freeze_kmeans_artifact_lifecycle(spark, vectors, tmp_path):
     vectors.write.parquet(src)
     corpus = spark.read.parquet(src)
     path = str(tmp_path / "km")
-    similarity.freeze_kmeans(corpus, path, k=4, n_iter=3)
+    similarity.freeze_kmeans(
+        corpus, path, k=4, n_iter=3, exact_replay=exact
+    )
     live = {
         r["vec_id"]: (r["cluster_id"], r["sim"])
-        for r in similarity.kmeans_clusters(corpus, k=4, n_iter=3).collect()
+        for r in similarity.kmeans_clusters(
+            corpus, k=4, n_iter=3, exact_replay=exact
+        ).collect()
     }
     frozen = {
         r["vec_id"]: (r["cluster_id"], r["sim"])
@@ -1803,7 +1814,9 @@ def test_freeze_kmeans_artifact_lifecycle(spark, vectors, tmp_path):
         return max(os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d))
 
     m0 = newest_mtime()
-    similarity.freeze_kmeans(corpus, path, k=4, n_iter=3)  # fresh -> skip
+    similarity.freeze_kmeans(
+        corpus, path, k=4, n_iter=3, exact_replay=exact
+    )  # fresh -> skip
     assert newest_mtime() == m0
     # param change -> stale -> refreeze
     similarity.freeze_kmeans(corpus, path, k=3, n_iter=3)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as _F
 
+from learn_hbase_spark import driver_path
 from learn_hbase_spark.widetable import WideTable
 
 
@@ -1508,7 +1509,7 @@ def test_index_probe_above_the_driver_cap_matches_below(
 
     below = rows()
     assert local()  # 7 candidates: resolved on the driver
-    monkeypatch.setattr(WideTable, "INDEX_PROBE_DRIVER_CAP", 1)
+    monkeypatch.setattr(driver_path, "INDEX_PROBE_DRIVER_CAP", 1)
     above = rows()
     assert not local()  # the broadcast semi-join
     assert above == below
