@@ -229,7 +229,8 @@ def _np_norm_rows(m):
 def _topk_cells_np(raw, cent_matrix, probes: int):
     """THE cell-assignment rule, shared by every IVF stage — the
     ``ivf_seed_cells``/``ivf_topk`` assignment passes (via
-    :func:`_cell_assigner`) and ``ivf_topk``'s fused refinement kernel:
+    :func:`_cell_assigner`) and the fused Lloyd-round kernel
+    (:func:`_micro_partial_sums`):
     L2-normalize the rows, score against the (already normalized)
     centroid matrix, take the ``probes`` best cells per row. kind="stable"
     is load-bearing: default quicksort is NOT stable, so exact cosine ties
@@ -306,53 +307,41 @@ def ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_replay: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k: a coarse quantizer splits the
     corpus into `nlist` cells; each query probes only its `nprobe` nearest
     cells and scores those candidates exactly.
 
     Centroids: the `nlist` lowest-id vectors seed the quantizer, refined by
-    one Lloyd step over a deterministic hash-sample of the corpus (assign
-    via Arrow-batched NumPy argmax → per-cell mean). Training on a sample
-    means the FULL corpus is scanned exactly once — by the final
-    assignment pass — instead of once for refinement and again for
-    assignment. Only the centroid matrix (nlist x dim floats) ever reaches
-    the driver — bounded index metadata, same class as a broadcast dim
-    table; corpus vectors stay distributed. At 100 TB the cell id is the
-    storage partition key, so probing prunes partitions; `nlist` grows
-    with the corpus (~sqrt(N)) and `train_mod` grows so the sample stays
-    executor-bounded.
+    one Lloyd round (:func:`_lloyd_round`) over the deterministic
+    ``id % train_mod`` sample of the corpus. Training on a sample means the
+    FULL corpus is scanned exactly once — by the final assignment pass —
+    instead of once for refinement and again for assignment. Only the
+    centroid matrix (nlist x dim floats) ever reaches the driver — bounded
+    index metadata, same class as a broadcast dim table; corpus vectors
+    stay distributed. At 100 TB the cell id is the storage partition key,
+    so probing prunes partitions; `nlist` grows with the corpus (~sqrt(N))
+    and `train_mod` grows so the sample stays executor-bounded.
 
-    ``exact_replay=True`` switches the REFINEMENT to the engine-portable
-    form that lets the whole query carry a chained-CTE DuckDB oracle —
-    the ``pagerank exact_replay`` / BPE promotion recipe applied to the
-    one Lloyd step (VERDICT r12 #4): (a) the training sample is selected
-    by plain ``id % train_mod`` instead of ``xxhash64`` (the hash is
-    Spark-specific, a modulus replays in any engine; both are
-    deterministic 1-in-``train_mod`` rules); (b) the refined means are
-    computed from exact integer micro-unit component sums — associative,
-    so any partial-agg order gives the same bits in both engines — and
-    rounded half-up to 6 decimals in integer arithmetic
-    (:func:`half_up_mean`), instead of the fused float partial-sum kernel
-    whose summation order is engine-local. Assignment, probing, scoring,
-    and ranking are the SAME kernels in both modes; cross-engine
-    cosine/argmax agreement
-    rests on the same separation argument the ``ivf_cell_assign`` /
-    ``ann_cosine_topk`` oracles have held green on since r2. The default
-    (False) keeps the zero-exchange fused float path for production.
+    The refinement is engine-portable, which lets the whole query carry a
+    chained-CTE DuckDB oracle (``ann_ivf_topk``): a modulus sample replays
+    in any engine, and the refined means come from exact integer
+    micro-unit component sums — associative, so any partial-agg order
+    gives the same bits in both engines — rounded half-up to 6 decimals in
+    integer arithmetic (:func:`half_up_mean`). Cross-engine cosine/argmax
+    agreement in assignment, probing, scoring and ranking rests on the
+    same separation argument the ``ivf_cell_assign`` / ``ann_cosine_topk``
+    oracles have held green on since r2.
     """
     import numpy as np
-    import pandas as pd
-
-    _norm_rows = _np_norm_rows
-    _assign = _cell_assigner
 
     seeds = (
         corpus.orderBy(F.col(id_col).asc()).limit(nlist)
         .select(vec_col).toPandas()[vec_col]
     )
-    cents = _norm_rows(np.stack([np.asarray(v, dtype=np.float64) for v in seeds]))
+    cents = _np_norm_rows(
+        np.stack([np.asarray(v, dtype=np.float64) for v in seeds])
+    )
 
     prepped = corpus.select(
         F.col(id_col).alias("_id"),
@@ -362,114 +351,24 @@ def ivf_topk(
     # (sample refinement + final assignment). Re-measured r8 at sf0.1,
     # min-of-3: none 0.676 s vs localCheckpoint 0.663 s on the execution
     # phase — a wash, so the simpler no-materialization form stays.
-    schema = "_id long, _v array<double>, _cell int"
     # refinement trains on a deterministic 1/train_mod sample so the
     # full corpus is only assigned once (below, under the refined centroids)
     train_mod = 4
-
-    if exact_replay:
-        # engine-portable refinement (see docstring): modulus sample,
-        # assign with the shared kernel, then exact micro-unit component
-        # sums → integer half-up means. Driver pull is nlist x dim rows —
-        # the bounded k-means-centroid class.
-        sample = prepped.filter(F.pmod(F.col("_id"), F.lit(train_mod)) == 0)
-        # r16: assignment + exact decimal partial sums fused into one
-        # Arrow kernel (shared with _kmeans_fit) — the sample's vectors
-        # never cross back to the JVM and no N×dim posexplode runs;
-        # bit-parity argued at _micro_partial_sums.
-        mean_rows = _exact_mean_rows(sample, cents)
-        cents2 = cents.copy()  # member-less cells keep their seed row
-        if mean_rows:
-            raw = np.zeros_like(cents)
-            for r in mean_rows:
-                raw[r["_cell"], r["_dim"]] = r["_m"]
-            touched = sorted({int(r["_cell"]) for r in mean_rows})
-            cents2[touched] = _norm_rows(raw[touched])
-        return _ivf_probe_rank(
-            queries, prepped, cents2, k, nlist, nprobe, id_col, vec_col
-        )
-
-    sample = prepped.filter(
-        F.pmod(F.xxhash64(F.col("_id")), F.lit(train_mod)) == 0
-    ).withColumn("_pid", F.spark_partition_id())
-
-    # One Lloyd refinement, FUSED into a single Python stage: each task
-    # assigns its batch (same _topk_cells_np rule as every other IVF
-    # stage) and emits per-(partition, cell) partial sums — ≤ nlist tiny
-    # rows per batch — which the driver combines in canonical
-    # (cell, partition) order. Replaces the r7 shape (assignment
-    # mapInPandas → groupBy → applyInPandas → toPandas): same bounded
-    # driver pull, but one Python stage and ZERO exchanges instead of two
-    # Python stages around a shuffle (measured 0.67 → 0.27 s at sf0.1 —
-    # the construction latency the r7→r8 bench regression traced to).
-    # At cluster scale the partials are a map-side-only aggregation: the
-    # refinement never reshuffles the sample.
-    def _partial_cell_sums(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            raw = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_v"]]
-            )
-            cells = _topk_cells_np(raw, cents, 1)[:, 0]
-            pid = int(pdf["_pid"].iloc[0])
-            rows = []
-            for c in np.unique(cells):
-                mask = cells == c
-                rows.append(
-                    (pid, int(c), raw[mask].sum(axis=0).tolist(),
-                     int(mask.sum()))
-                )
-            yield pd.DataFrame(
-                rows, columns=["_pid", "_cell", "_s", "_n"]
-            )
-
-    parts = sample.mapInPandas(
-        _partial_cell_sums,
-        schema="_pid int, _cell int, _s array<double>, _n long",
-    ).toPandas()
-    cents2 = cents.copy()  # cells that lost all members keep their seed
-    if len(parts):
-        parts = parts.sort_values(["_cell", "_pid"], kind="stable")
-        touched = []
-        for c, grp in parts.groupby("_cell", sort=True):
-            s = np.stack([np.asarray(v) for v in grp["_s"]]).sum(axis=0)
-            cents2[int(c)] = s / grp["_n"].sum()
-            touched.append(int(c))
-        # normalize ONLY the rows rebuilt from partial sums: member-less
-        # cells keep their seed row byte-identical (re-normalizing a
-        # ~unit-norm seed can shift it by an ulp and flip assignments at
-        # exact ties)
-        cents2[touched] = _norm_rows(cents2[touched])
-
-    return _ivf_probe_rank(
-        queries, prepped, cents2, k, nlist, nprobe, id_col, vec_col
+    cents = _lloyd_round(
+        prepped.filter(F.pmod(F.col("_id"), F.lit(train_mod)) == 0), cents
     )
 
-
-def _ivf_probe_rank(
-    queries: DataFrame,
-    prepped: DataFrame,
-    cents2,
-    k: int,
-    nlist: int,
-    nprobe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """The probe-and-rank tail shared by both :func:`ivf_topk` refinement
-    modes: assign the corpus and the queries under the refined centroid
-    matrix (same :func:`_cell_assigner` kernel), join candidates on cell,
-    score exactly by cosine, rank with the ascending-id tiebreak."""
+    # probe and rank: assign the corpus and the queries under the refined
+    # centroids (same _cell_assigner kernel), join candidates on cell,
+    # score exactly by cosine, rank with the ascending-id tiebreak
     schema = "_id long, _v array<double>, _cell int"
-    _assign = _cell_assigner
-    corpus_cells = prepped.mapInPandas(_assign(cents2, 1), schema=schema)
+    corpus_cells = prepped.mapInPandas(_cell_assigner(cents, 1), schema=schema)
     q_prepped = queries.select(
-        F.col(id_col).alias("_qid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_qv"),
-    ).withColumnsRenamed({"_qid": "_id", "_qv": "_v"})
+        F.col(id_col).alias("_id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+    )
     q_cells = q_prepped.mapInPandas(
-        _assign(cents2, min(nprobe, nlist)), schema=schema
+        _cell_assigner(cents, min(nprobe, nlist)), schema=schema
     ).withColumnsRenamed({"_id": "_qid", "_v": "_qv"})
 
     pairs = corpus_cells.join(F.broadcast(q_cells), on="_cell").filter(
@@ -532,7 +431,6 @@ def kmeans_clusters(
     n_iter: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exact_replay: bool = False,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means over the embedding column — corpus
     clustering for curation (domain discovery, cluster-balanced sampling,
@@ -554,31 +452,31 @@ def kmeans_clusters(
       latency at this size: at sf0.1 (2,000 x 64) the loop ran 10 Spark
       jobs.
     - **Distributed loop**, above the cap: each round is one Arrow-batched
-      assignment pass (``mapInPandas``) plus one per-cell mean, and only
-      the k x dim centroid matrix reaches the driver. At 100 TB: k grows
-      ~sqrt(N), the assignment pass is embarrassingly parallel, and the
-      per-round driver collect is k rows regardless of corpus size.
+      pass fusing assignment with per-cell partial sums (``mapInPandas``)
+      plus one small ``groupBy`` of those partials (:func:`_lloyd_round`),
+      and only the k x dim centroid matrix reaches the driver. At 100 TB:
+      k grows ~sqrt(N), the pass is embarrassingly parallel, and the
+      per-round driver collect is k x dim rows regardless of corpus size.
 
     Both paths share the assignment rule, the quantizer and the mean rule,
     so they return the same rows. Returns ``(id_col, cluster_id, sim)`` —
     sim is cosine similarity to the assigned (final) centroid, rounded to
     6 by a Spark expression on either path.
 
-    ``exact_replay=True`` computes each round's per-cell means from exact
-    integer micro-unit component sums (each component quantized as
+    Each round's per-cell means come from exact integer micro-unit
+    component sums (each component quantized as
     ``cast(double AS decimal(18,6))`` does), rounded half away from zero
     in integer arithmetic (:func:`half_up_mean`). Integer sums are
     associative, so any partial-agg order gives the same bits in every
     engine, and the integer rounding has no double quotient whose decimal
     half-ties two engines could break differently. That makes the FULL
     fixed-round run replayable as chained SQL CTEs and lets
-    ``embedding_kmeans`` carry a complete DuckDB oracle. The float mode
-    takes the id-ordered mean of each cell's members. Cross-engine
+    ``embedding_kmeans`` carry a complete DuckDB oracle. Cross-engine
     agreement of the argmax and the final ``round(sim, 6)`` rests on the
     separation of the cosine scores, as in the assignment oracles.
     """
     prepped, local = _kmeans_prepped(corpus, id_col, vec_col)
-    cents = _kmeans_fit(prepped, k, n_iter, exact_replay, local)
+    cents = _kmeans_fit(prepped, k, n_iter, local)
     spark = corpus.sparkSession
     if local is None:
         final = prepped.mapInPandas(
@@ -706,7 +604,7 @@ def _micro_partial_sums(cent_matrix):
     partials, not payloads): the raw vectors never cross Python→JVM and
     the exchange carries ≤ tasks × k × dim tiny partial rows. Integer
     addition is exact, so ANY partial grouping gives the same totals (the
-    associativity the exact_replay contract is built on); per-element
+    associativity the cross-engine replay is built on); per-element
     quantization parity with Spark's ``cast(double AS decimal(18,6))`` is
     :func:`_micro_quantize`."""
     import numpy as np
@@ -765,14 +663,20 @@ def _half_up_mean_np(s, n):
     return np.where(s < 0, -q, q) / 1e6
 
 
-def _exact_mean_rows(frame, cent_matrix):
-    """Driver-collected ``(cell, dim, mean)`` rows of one exact-replay
-    Lloyd round over a prepped ``(_id, _v)`` frame — the shared
-    round body of :func:`_kmeans_fit`'s loop and :func:`ivf_topk`'s
-    ``exact_replay`` refinement: fused assignment and micro-unit partial
-    sums (:func:`_micro_partial_sums`), summed per (cell, dim), then the
-    integer half-up mean (:func:`half_up_mean`)."""
-    return (
+def _lloyd_round(frame, cent_matrix):
+    """One distributed Lloyd round over a prepped ``(_id, _v)`` frame,
+    returning the refined centroid matrix — the round body of
+    :func:`_kmeans_fit`'s loop and :func:`ivf_topk`'s refinement: fused
+    assignment and micro-unit partial sums (:func:`_micro_partial_sums`),
+    summed per (cell, dim), then the integer half-up mean
+    (:func:`half_up_mean`). The driver pull is k x dim rows — the bounded
+    centroid class. Only the rows rebuilt from means are re-normalized:
+    member-less cells keep their previous row byte-identical
+    (re-normalizing a ~unit-norm row can shift it by an ulp and flip
+    assignments at exact ties)."""
+    import numpy as np
+
+    mean_rows = (
         frame.mapInPandas(
             _micro_partial_sums(cent_matrix),
             schema="_cell int, _dim int, _s long, _n long",
@@ -784,22 +688,30 @@ def _exact_mean_rows(frame, cent_matrix):
         )
         .collect()
     )
+    cents = cent_matrix.copy()
+    if mean_rows:
+        raw = np.zeros_like(cent_matrix)
+        for r in mean_rows:
+            raw[r["_cell"], r["_dim"]] = r["_m"]
+        touched = sorted({int(r["_cell"]) for r in mean_rows})
+        cents[touched] = _np_norm_rows(raw[touched])
+    return cents
 
 
-def _kmeans_fit(prepped, k: int, n_iter: int, exact_replay: bool, local=None):
+def _kmeans_fit(prepped, k: int, n_iter: int, local=None):
     """The deterministic Lloyd loop over a prepped ``(_id, _v)`` frame:
     k lowest-id seeds, ``n_iter`` fixed rounds, per-round driver state =
     the k×dim centroid matrix. Shared by :func:`kmeans_clusters` (which
     labels the corpus with the result) and :func:`freeze_kmeans` (which
     persists it as the deployment artifact). With ``local`` (the
     driver-held rows from :func:`_kmeans_prepped`) the rounds run in
-    numpy (:func:`_lloyd_local`); without it, as Spark jobs."""
+    numpy (:func:`_lloyd_local`); without it, as Spark jobs
+    (:func:`_lloyd_round`)."""
     import numpy as np
-    import pandas as pd
 
     if local is not None:
         _, ids, raw = local
-        return _lloyd_local(ids, raw, k, n_iter, exact_replay)
+        return _lloyd_local(ids, raw, k, n_iter)
 
     seeds = (
         prepped.orderBy(F.col("_id").asc()).limit(k).toPandas()["_v"]
@@ -807,72 +719,34 @@ def _kmeans_fit(prepped, k: int, n_iter: int, exact_replay: bool, local=None):
     cents = _np_norm_rows(
         np.stack([np.asarray(v, dtype=np.float64) for v in seeds])
     )
-
-    schema = "_id long, _v array<double>, _cell int"
-
-    def _cell_mean(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        # id-sorted before the mean: float summation is order-dependent,
-        # and group row order otherwise varies with upstream partitioning
-        pdf = pdf.sort_values("_id")
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-        return pd.DataFrame({"_cell": [key[0]], "_v": [m.mean(axis=0).tolist()]})
-
     for _ in range(n_iter):
-        new_cents = cents.copy()
-        if exact_replay:
-            # exact integer component means (see kmeans_clusters); the
-            # driver pull is k x dim rows — the bounded centroid class
-            mean_rows = _exact_mean_rows(prepped, cents)
-            if mean_rows:
-                raw = np.zeros_like(cents)
-                for r in mean_rows:
-                    raw[r["_cell"], r["_dim"]] = r["_m"]
-                touched = sorted({int(r["_cell"]) for r in mean_rows})
-                new_cents[touched] = _np_norm_rows(raw[touched])
-        else:
-            assigned = prepped.mapInPandas(
-                _cell_assigner(cents, 1), schema=schema
-            )
-            means = (
-                assigned.groupBy("_cell")
-                .applyInPandas(_cell_mean, schema="_cell int, _v array<double>")
-                .toPandas()  # bounded: k rows
-            )
-            new_cents[means["_cell"].to_numpy()] = _np_norm_rows(
-                np.stack([np.asarray(v) for v in means["_v"]])
-            )
-        cents = new_cents  # empty cells keep their previous centroid
-
+        cents = _lloyd_round(prepped, cents)
     return cents
 
 
-def _lloyd_local(ids, raw, k: int, n_iter: int, exact_replay: bool):
+def _lloyd_local(ids, raw, k: int, n_iter: int):
     """:func:`_kmeans_fit`'s rounds over driver-held ``(ids, vectors)``,
     giving the loop path's bits: the same seeds (the k lowest ids), the
-    same assignment rule (:func:`_topk_cells_np`), and per mode the same
-    mean — integer micro-unit sums (:func:`_micro_quantize`) under
-    :func:`_half_up_mean_np`, or the id-ordered float mean of each
-    cell's members, as ``_cell_mean`` takes it."""
+    same assignment rule (:func:`_topk_cells_np`) and the same mean —
+    integer micro-unit sums (:func:`_micro_quantize`) under
+    :func:`_half_up_mean_np`."""
     import numpy as np
 
     if not len(ids):
         raise ValueError("k-means over an empty corpus")
     raw = raw[np.argsort(ids, kind="stable")]
     cents = _np_norm_rows(raw[:k])
-    if exact_replay:
-        micros, valid = _micro_quantize(raw)
-        micros[~valid] = 0  # NULL-parity: sum skips, count doesn't
+    micros, valid = _micro_quantize(raw)
+    micros[~valid] = 0  # NULL-parity: sum skips, count doesn't
     for _ in range(n_iter):
         cells = _topk_cells_np(raw, cents, 1)[:, 0]
         counts = np.bincount(cells, minlength=len(cents))
         touched = np.nonzero(counts)[0]
-        if exact_replay:
-            sums = np.stack([micros[cells == c].sum(axis=0) for c in touched])
-            means = _half_up_mean_np(sums, counts[touched, None])
-        else:
-            means = np.stack([raw[cells == c].mean(axis=0) for c in touched])
+        sums = np.stack([micros[cells == c].sum(axis=0) for c in touched])
         cents = cents.copy()  # empty cells keep their previous centroid
-        cents[touched] = _np_norm_rows(means)
+        cents[touched] = _np_norm_rows(
+            _half_up_mean_np(sums, counts[touched, None])
+        )
     return cents
 
 
@@ -893,7 +767,6 @@ def freeze_kmeans(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     src_fingerprint: str | None = None,
-    exact_replay: bool = False,
 ) -> None:
     """Persist the trained k-means centroids as a deployment artifact —
     train-once/assign-many for domain clustering, exactly the frozen
@@ -922,8 +795,8 @@ def freeze_kmeans(
         else ivf_pq_fingerprint(corpus)
     )
     stamp = (
-        f"{src}|k={k}|n={n_iter}|replay={int(bool(exact_replay))}"
-        f"|id={id_col}|vec={vec_col}|code={_code_digest()}"
+        f"{src}|k={k}|n={n_iter}|id={id_col}|vec={vec_col}"
+        f"|code={_code_digest()}"
         if src
         else ""
     )
@@ -932,7 +805,7 @@ def freeze_kmeans(
         return
     fs_delete(spark, marker)
     prepped, local = _kmeans_prepped(corpus, id_col, vec_col)
-    cents = _kmeans_fit(prepped, k, n_iter, exact_replay, local)
+    cents = _kmeans_fit(prepped, k, n_iter, local)
     driver_path.local_frame(
         spark, [range(len(cents)), list(cents)], "cell int, c array<double>"
     ).write.mode("overwrite").parquet(f"{path}/centroids")
@@ -1761,9 +1634,7 @@ def freeze_ivf_pq(
     # Deletes go through the Hadoop FS API: a local rmtree on an
     # hdfs://-path would silently no-op and leave the previous stream's
     # deltas live under the fresh meta.
-    spark.createDataFrame(
-        [_meta_tombstone()], _META_SCHEMA
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    _write_meta(spark, f"{path}/meta", _meta_tombstone())
     for sub_dir in ("cells_delta", "codes_delta", "meta_compact",
                     "cells_tmp", "codes_tmp", "cells_trash",
                     "codes_trash"):
@@ -1786,15 +1657,16 @@ def freeze_ivf_pq(
     sub = dim // m
     cents = _np_norm_rows(pulled[:nlist].copy())
 
-    spark.createDataFrame(
-        [(i, [float(x) for x in cents[i]]) for i in range(cents.shape[0])],
-        "cell int, c array<double>",
+    driver_path.local_frame(
+        spark, [range(len(cents)), list(cents)], "cell int, c array<double>"
     ).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.createDataFrame(
+    slots = [(j, c) for j in range(m) for c in range(seeds.shape[0])]
+    driver_path.local_frame(
+        spark,
         [
-            (j, c, [float(x) for x in seeds[c, j * sub:(j + 1) * sub]])
-            for j in range(m)
-            for c in range(seeds.shape[0])
+            [j for j, _ in slots],
+            [c for _, c in slots],
+            [seeds[c, j * sub:(j + 1) * sub] for j, c in slots],
         ],
         "subspace int, code int, sv array<double>",
     ).write.mode("overwrite").parquet(f"{path}/codebook")
@@ -1849,10 +1721,11 @@ def freeze_ivf_pq(
     src = src_fingerprint if src_fingerprint is not None else (
         ivf_pq_fingerprint(corpus)
     )
-    spark.createDataFrame(
-        [(nlist, m, k_codes, dim, src, time.time_ns(), _LAYOUT_VERSION)],
-        _META_SCHEMA,
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    _write_meta(
+        spark,
+        f"{path}/meta",
+        (nlist, m, k_codes, dim, src, time.time_ns(), _LAYOUT_VERSION),
+    )
     # drop any memoized quantizers for this path. The gen stamp already
     # makes every freeze's meta row distinct (so OTHER processes' caches
     # can't collide either); clearing our own slot as well just frees the
@@ -1917,6 +1790,13 @@ _META_SCHEMA = (
     "layout int"
 )
 _LAYOUT_VERSION = 2
+
+
+def _write_meta(spark, dest: str, row: tuple) -> None:
+    """Overwrite ``dest`` with the one _META_SCHEMA-shaped ``row``."""
+    driver_path.local_frame(
+        spark, [[v] for v in row], _META_SCHEMA
+    ).write.mode("overwrite").parquet(dest)
 
 
 def _meta_tombstone() -> tuple:
@@ -2308,7 +2188,8 @@ def freeze_sq8(
 
     Layout mirrors :func:`freeze_kmeans`: ``{path}/bounds`` (i, lo, hi —
     dim rows) + a ``{path}/_src`` text sidecar recording the corpus
-    fingerprint and vec_col, written AFTER the table and deleted BEFORE
+    fingerprint, vec_col and the code digest (:func:`_code_digest`),
+    written AFTER the table and deleted BEFORE
     the rewrite (validity marker last — a torn rewrite reads stale and
     refreezes; a stale marker can never vouch for mixed halves). Fresh ⇒
     skip. An empty fingerprint (non-file-backed corpus) always
@@ -2325,16 +2206,14 @@ def freeze_sq8(
         if src_fingerprint is not None
         else ivf_pq_fingerprint(corpus)
     )
-    stamp = f"{src}|vec={vec_col}" if src else ""
+    stamp = f"{src}|vec={vec_col}|code={_code_digest()}" if src else ""
     marker = f"{path}/_src"
     if stamp and read_text_sidecar(spark, marker) == stamp:
         return
     fs_delete(spark, marker)
     los, his = sq8_bounds(corpus, vec_col)
-    spark.createDataFrame(
-        [(i + 1, float(lo), float(hi))
-         for i, (lo, hi) in enumerate(zip(los, his))],
-        "i int, lo double, hi double",
+    driver_path.local_frame(
+        spark, [range(1, len(los) + 1), los, his], "i int, lo double, hi double"
     ).write.mode("overwrite").parquet(f"{path}/bounds")
     write_text_sidecar(spark, marker, stamp)
 
@@ -2549,9 +2428,7 @@ def extend_ivf_pq(
     # meta above a half-extended artifact. Hadoop FS delete: the sidecar
     # must actually clear on cluster URIs too.
     _fs_delete(spark, f"{path}/meta_compact")
-    spark.createDataFrame(
-        [_meta_tombstone()], _META_SCHEMA
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    _write_meta(spark, f"{path}/meta", _meta_tombstone())
 
     # ONE fused assign+encode pass over the new shard (r16 — was: an
     # assignment pass checkpointed, a SECOND full pass over the shard
@@ -2577,11 +2454,12 @@ def extend_ivf_pq(
         F.col("_cell").alias("cell"),
     ).write.mode("append").parquet(f"{path}/codes")
 
-    spark.createDataFrame(
-        [(nlist, m, k_codes, dim, src_fingerprint or "", time.time_ns(),
-          _LAYOUT_VERSION)],
-        _META_SCHEMA,
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    _write_meta(
+        spark,
+        f"{path}/meta",
+        (nlist, m, k_codes, dim, src_fingerprint or "", time.time_ns(),
+         _LAYOUT_VERSION),
+    )
     # the quantizers themselves are unchanged by an extend, but the meta
     # row (cache key, now including the fresh gen stamp) moved — drop the
     # old entry rather than let the single-slot cache hold a dead key
@@ -2772,12 +2650,8 @@ def compact_ivf_pq(spark, path: str) -> None:
     recovery = _try_parquet(spark, f"{path}/meta_compact")
     if live is not None and int(live["nlist"]) >= 0:
         saved = _meta_values(live)
-        spark.createDataFrame([saved], _META_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/meta_compact")
-        spark.createDataFrame(
-            [_meta_tombstone()], _META_SCHEMA
-        ).write.mode("overwrite").parquet(f"{path}/meta")
+        _write_meta(spark, f"{path}/meta_compact", saved)
+        _write_meta(spark, f"{path}/meta", _meta_tombstone())
     elif recovery is not None:
         # resuming a crashed compact: live meta is already tombstoned
         saved = _meta_values(recovery.collect()[0])
@@ -2819,7 +2693,5 @@ def compact_ivf_pq(spark, path: str) -> None:
         for aux in (delta_p, tmp_p, trash_p):
             _fs_delete(spark, aux)
 
-    spark.createDataFrame([saved], _META_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/meta")
+    _write_meta(spark, f"{path}/meta", saved)
     _fs_delete(spark, f"{path}/meta_compact")

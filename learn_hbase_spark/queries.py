@@ -342,8 +342,11 @@ def _neardup_clusters_audit_body(spark: SparkSession, sf_dir: str):
 
 def _semantic_dedup_audit_body(spark: SparkSession, sf_dir: str):
     """semantic_dedup's real upstream (k-means assignment + within-cell
-    pair search — both Python-kernel stages the truncated plan hid)
-    composed through one un-truncated CC round."""
+    pair search) composed through one un-truncated CC round. Below
+    ``driver_path.KMEANS_DRIVER_VALUES_CAP`` the assignment runs on the
+    driver and enters the plan as an Arrow-built local relation; the
+    within-cell pair search is the Python-kernel stage the truncated plan
+    hid."""
     emb = _t(spark, sf_dir, "embeddings")
     assigned = similarity.kmeans_clusters(emb, k=8, n_iter=3).select(
         "vec_id", "cluster_id"
@@ -4162,27 +4165,25 @@ def _half_up_mean_sql(total: str, n: str) -> str:
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-k: coarse quantizer (seeded + one Lloyd
     step) splits the corpus into cells; queries probe their 4 nearest of 16
-    cells. PROMOTED to a full oracle in r13 (VERDICT r12 #4) via
-    ``ivf_topk(exact_replay=True)``: the refinement chains as CTEs —
+    cells. PROMOTED to a full oracle in r13 (VERDICT r12 #4): the
+    ``ivf_topk`` refinement chains as CTEs —
     seed-assign the ``vec_id % 4`` training sample (the
     ``ivf_cell_assign`` argmax), DECIMAL-exact per-cell component sums
     with an integer half-up mean (``_half_up_mean_sql``), reassign
     corpus + queries under the refined centroids, then exact-cosine rank
     over the probed cells (the ``ann_cosine_topk`` final stage). Cells
-    that lost every sampled member keep their seed (the COALESCE).
-    Production's fused float-partial-sum refinement stays the default
-    code path, recall-tested in pytest."""
+    that lost every sampled member keep their seed (the COALESCE). The
+    query runs the operator's one refinement; its recall is also
+    pytest-pinned against brute force."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-    return similarity.ivf_topk(
-        q, emb, k=10, nlist=16, nprobe=4, exact_replay=True
-    )
+    return similarity.ivf_topk(q, emb, k=10, nlist=16, nprobe=4)
 
 
 def _kmeans_replay_ctes(
     n_rounds: int = 5, k: int = 8, src: str = "embeddings"
 ) -> str:
-    """Chained-CTE replay of ``kmeans_clusters(exact_replay=True)``'s
+    """Chained-CTE replay of ``kmeans_clusters``'s
     fixed ``n_rounds`` Lloyd rounds — the pagerank/BPE/ann_ivf_topk
     promotion recipe applied to the k-means fixpoint: each round is
     (assign by max-cosine, ties to lowest cell) → (per-cell per-dim
@@ -4264,15 +4265,16 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus clustering: deterministic Lloyd's k-means over the embedding
     table (similarity.kmeans_clusters) — domain discovery / cluster-
     balanced sampling for curation. PROMOTED to a full oracle in r13
-    (VERDICT r12 #4 stretch) via ``exact_replay=True``: the pinned 5
+    (VERDICT r12 #4 stretch): the pinned 5
     Lloyd rounds chain as CTEs (``_kmeans_replay_ctes`` — integer
     assignments, DECIMAL-exact sums with integer half-up means, COALESCE
     empty-cell carry), and the final pass emits (cluster_id,
     round(sim, 6)) — the ``ann_ivf_topk`` recipe at k-means depth. The
-    float refinement stays the production default, agreement with a
-    single-node numpy reference pytest-pinned (tests/test_llm_ops.py)."""
+    query runs the operator's one refinement; agreement with a
+    single-node numpy reference is also pytest-pinned
+    (tests/test_llm_ops.py)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.kmeans_clusters(emb, k=8, n_iter=5, exact_replay=True)
+    return similarity.kmeans_clusters(emb, k=8, n_iter=5)
 
 
 @_register(
@@ -4311,9 +4313,7 @@ def kmeans_assign_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(
         _SCRATCH_ROOT, f"kmeans_{os.path.basename(sf_dir.rstrip('/'))}"
     )
-    similarity.freeze_kmeans(
-        emb, path, k=8, n_iter=5, exact_replay=True
-    )
+    similarity.freeze_kmeans(emb, path, k=8, n_iter=5)
     batch = emb.filter(F.col("vec_id") % 5 == 0)
     return similarity.kmeans_assign_frozen(batch, path)
 
@@ -7646,20 +7646,17 @@ def neardup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_dedup_impl(
-    spark: SparkSession, sf_dir: str, k_cells: int = 8,
-    exact_replay: bool = False,
+    spark: SparkSession, sf_dir: str, k_cells: int = 8
 ) -> DataFrame:
     """The semantic_dedup pipeline with the k-means cell count exposed —
     production scales k ∝ N to hold per-cell size (and so the within-cell
     quadratic pair term) constant; tools/scaling_slope.py measures exactly
     that knob (the r11 25× exponent 0.65 was attributed to FIXED k while
-    cells grew 25×). One body so the registered query and the scaling
-    measurement cannot drift. ``exact_replay`` selects the clustering
-    refinement mode (the registered query passes True for its oracle; the
-    scaling measurement keeps the production float path)."""
+    cells grew 25×). One body, and one k-means refinement, so the
+    registered query and the scaling measurement cannot drift."""
     emb = _t(spark, sf_dir, "embeddings")
     assigned = similarity.kmeans_clusters(
-        emb, k=k_cells, n_iter=3, exact_replay=exact_replay
+        emb, k=k_cells, n_iter=3
     ).select("vec_id", "cluster_id")
     with_vec = assigned.join(emb.select("vec_id", "embedding"), "vec_id")
     # 0.35 matches the synthetic embeddings' similarity range (max ~0.51,
@@ -7730,7 +7727,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative per cluster. The composition the big labs run to
     semantically dedup pretraining corpora; every stage here is the
     individually-tested operator. PROMOTED to a full oracle in r13: the
-    clustering stage rides ``kmeans_clusters(exact_replay=True)``'s
+    clustering stage rides ``kmeans_clusters``'
     chained-CTE replay (3 rounds, ``_kmeans_replay_ctes``), the
     within-cell pair search is a rounded-cosine threshold join over the
     final assignment, and the transitive closure + min-id retention
@@ -7738,8 +7735,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses — the closure is algorithm-independent, so large-star/small-star
     needs no round replay, only its min-reachable-id RESULT. Body in
     ``_semantic_dedup_impl`` (k_cells=8 here; production scales k ∝ N —
-    measured in SCALE.md's 25× table, which keeps the float path)."""
-    return _semantic_dedup_impl(spark, sf_dir, k_cells=8, exact_replay=True)
+    measured in SCALE.md's 25× table, taken on the since-deleted float
+    Lloyd refinement)."""
+    return _semantic_dedup_impl(spark, sf_dir, k_cells=8)
 
 
 _SEMDEDUP_COS = """round(
@@ -7815,7 +7813,7 @@ def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(
         _SCRATCH_ROOT, f"semdedup_km_{os.path.basename(sf_dir.rstrip('/'))}"
     )
-    similarity.freeze_kmeans(hist, path, k=8, n_iter=3, exact_replay=True)
+    similarity.freeze_kmeans(hist, path, k=8, n_iter=3)
     return similarity.semdedup_gate(new, hist, path, threshold=0.35)
 
 

@@ -1,10 +1,11 @@
 """Driver-side fast paths: k-means below ``KMEANS_DRIVER_VALUES_CAP`` against
-the distributed loop, the integer half-up mean, the code-stamped freeze, and
+the distributed loop, the integer half-up mean, the code-stamped freezes, and
 the ratchet on Python-RDD local frames."""
 
 from __future__ import annotations
 
 import ast
+import functools
 import importlib.util
 import pathlib
 import random
@@ -28,31 +29,61 @@ def _value_hash():
 
 
 @pytest.fixture(scope="module")
-def tie_dir(tmp_path_factory):
-    """Seed 9 at 300 documents / 200 embeddings: a k-means cell mean in
-    round 4 is the exact decimal half-tie 0.712630 / 20 = 0.0356315."""
+def seeded_dir(tmp_path_factory):
+    """``seed -> dir`` of perfbench tables at 300 documents / 200
+    embeddings, each generated once per module."""
     from perfbench import gen
 
-    d = str(tmp_path_factory.mktemp("seed9"))
-    gen.write_tables(d, 0.001, 9, rows={"documents": 300, "embeddings": 200})
-    return d
+    @functools.cache
+    def make(seed):
+        d = str(tmp_path_factory.mktemp(f"seed{seed}_"))
+        gen.write_tables(
+            d, 0.001, seed, rows={"documents": 300, "embeddings": 200}
+        )
+        return d
+
+    return make
 
 
+@pytest.fixture(scope="module")
+def tie_dir(seeded_dir):
+    """Seed 9: a k-means cell mean in round 4 is the exact decimal half-tie
+    0.712630 / 20 = 0.0356315."""
+    return seeded_dir(9)
+
+
+# rows each sweep query returns on 200 embeddings
+_SWEEP_ROWS = {
+    "embedding_kmeans": 200,
+    "kmeans_assign_frozen": 40,  # the vec_id % 5 = 0 batch
+    "semantic_dedup": 200,
+    "semdedup_incremental": 40,
+    "ann_ivf_topk": 100,  # 10 queries x top 10
+}
+
+
+@pytest.mark.parametrize("seed", [9, 23])
+@pytest.mark.parametrize("query", list(_SWEEP_ROWS))
 def test_embedding_kmeans_matches_its_oracle_on_a_half_tie(
-    spark, km_path, tie_dir
+    spark, km_path, seeded_dir, query, seed
 ):
+    """The k-means/IVF queries against their DuckDB oracles on seed 9 (the
+    half-tie) and one more seed. The frozen-centroid queries reuse the
+    artifact the first path froze for a seed, which is sound because both
+    paths give the same centroids (test_kmeans_driver_path_equals_the_loop)."""
     import duckdb
 
     from learn_hbase_spark import queries as Q
 
-    got = Q.queries()["embedding_kmeans"](spark, tie_dir).toPandas()
+    d = seeded_dir(seed)
+    got = Q.queries()[query](spark, d).toPandas()
     con = duckdb.connect()
     con.execute(
-        f"CREATE VIEW embeddings AS SELECT * FROM '{tie_dir}/embeddings.parquet'"
+        f"CREATE VIEW embeddings AS SELECT * FROM '{d}/embeddings.parquet'"
     )
-    want = con.execute(Q.oracle_sql()["embedding_kmeans"]).df()
+    want = con.execute(Q.oracle_sql()[query]).df()
     value_hash = _value_hash()
-    assert len(got) == len(want) == 200
+    assert len(got) == len(want) == _SWEEP_ROWS[query]
     assert value_hash(got) == value_hash(want)
 
 
@@ -99,8 +130,7 @@ def _both_paths(monkeypatch, fn):
     return out
 
 
-@pytest.mark.parametrize("exact", [True, False])
-def test_kmeans_driver_path_equals_the_loop(spark, monkeypatch, tie_dir, exact):
+def test_kmeans_driver_path_equals_the_loop(spark, monkeypatch, tie_dir):
     """Byte-identical rows on both paths: seeded corpora, the seed-9 tie
     input, duplicate vectors (argmax ties and an empty cell) and
     ``n_iter=0``."""
@@ -115,7 +145,7 @@ def test_kmeans_driver_path_equals_the_loop(spark, monkeypatch, tie_dir, exact):
     for case, (corpus, k, n_iter) in enumerate(cases):
         got[case] = _both_paths(monkeypatch, lambda: sorted(
             map(tuple, similarity.kmeans_clusters(
-                corpus, k=k, n_iter=n_iter, exact_replay=exact
+                corpus, k=k, n_iter=n_iter
             ).collect())
         ))
         assert got[case]["driver"] == got[case]["loop"]
@@ -131,7 +161,7 @@ def test_kmeans_on_the_driver_runs_at_most_three_jobs(spark):
     group = "km-driver"
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        out = similarity.kmeans_clusters(corpus, k=4, n_iter=3, exact_replay=True)
+        out = similarity.kmeans_clusters(corpus, k=4, n_iter=3)
         out.write.mode("overwrite").format("noop").save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -140,26 +170,30 @@ def test_kmeans_on_the_driver_runs_at_most_three_jobs(spark):
     assert jobs <= 3, f"kmeans_clusters + write ran {jobs} jobs"
 
 
+@pytest.mark.parametrize("freeze, table", [
+    (functools.partial(similarity.freeze_kmeans, k=2, n_iter=1), "centroids"),
+    (similarity.freeze_sq8, "bounds"),
+], ids=["kmeans", "sq8"])
 def test_freeze_kmeans_refreezes_when_the_code_digest_changes(
-    spark, monkeypatch, tmp_path
+    spark, monkeypatch, tmp_path, freeze, table
 ):
     import os
 
     src = str(tmp_path / "corpus")
     _corpus(spark, 5, n=24, dim=4).write.parquet(src)
     corpus = spark.read.parquet(src)
-    path = str(tmp_path / "km")
+    path = str(tmp_path / "artifact")
 
     def newest_mtime():
-        d = f"{path}/centroids"
+        d = f"{path}/{table}"
         return max(os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d))
 
-    similarity.freeze_kmeans(corpus, path, k=2, n_iter=1, exact_replay=True)
+    freeze(corpus, path)
     m0 = newest_mtime()
-    similarity.freeze_kmeans(corpus, path, k=2, n_iter=1, exact_replay=True)
+    freeze(corpus, path)
     assert newest_mtime() == m0  # same code: fresh
     monkeypatch.setattr(similarity, "_code_digest", lambda: "other-code")
-    similarity.freeze_kmeans(corpus, path, k=2, n_iter=1, exact_replay=True)
+    freeze(corpus, path)
     assert newest_mtime() > m0
     with open(f"{path}/_src") as f:
         assert f.read().endswith("|code=other-code")
@@ -191,7 +225,7 @@ def _list_create_dataframe_calls() -> int:
 def test_list_create_dataframe_calls_only_go_down():
     """A list becomes a Python RDD, and its consumer a Python-worker job;
     new driver frames go through ``driver_path.local_frame``."""
-    assert _list_create_dataframe_calls() <= 15
+    assert _list_create_dataframe_calls() <= 5
 
 
 def test_local_frame_types_every_column(spark):

@@ -179,11 +179,20 @@ UNCHECKPOINTED_AUDIT: dict[str, str] = {
 @contextlib.contextmanager
 def no_localcheckpoint():
     """Patch the concrete (classic) DataFrame class — patching the
-    pyspark.sql.DataFrame base does NOT intercept Spark 4 instances."""
+    pyspark.sql.DataFrame base does NOT intercept Spark 4 instances.
+    A pinned frame that is itself an ``observe`` still runs once (a noop
+    write), so its Observation fires: k-means reads its component count
+    from the checkpoint's job, and ``Observation.get`` blocks until that
+    count arrives, so a pure identity hangs the audit."""
     from pyspark.sql.classic.dataframe import DataFrame as _CDF
 
+    def _unpinned(self, eager=True):
+        if self._jdf.queryExecution().logical().nodeName() == "CollectMetrics":
+            self.write.mode("overwrite").format("noop").save()
+        return self
+
     orig = _CDF.localCheckpoint
-    _CDF.localCheckpoint = lambda self, eager=True: self
+    _CDF.localCheckpoint = _unpinned
     try:
         yield
     finally:

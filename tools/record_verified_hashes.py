@@ -61,13 +61,13 @@ _ROWS_ONLY_CHECKS = {
         "tests/test_sketches.py::test_approx_quantiles_near_exact",
     ],
     # ann_ivf_topk and embedding_kmeans left this table in round 13: the
-    # exact_replay Lloyd refinement (modulus sample / decimal-exact
+    # exact-replay Lloyd refinement (modulus sample / decimal-exact
     # rounded means) gave both full chained-CTE DuckDB oracles.
     # pagerank_neardup left this table in round 11: exact_replay gave it
     # a FULL DuckDB oracle (five integer-fixed-point power iterations
     # replayed as chained CTEs), so the driver's value-hash check is the
     # bar again.
-    # semantic_dedup left this table in round 13: exact_replay clustering
+    # semantic_dedup left this table in round 13: exact-replay clustering
     # + rounded-cosine pair join + recursive-CTE closure gave it a full
     # DuckDB oracle (the closure needs no round replay — min-reachable-id
     # is algorithm-independent).

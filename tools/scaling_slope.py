@@ -44,7 +44,10 @@ The pseudo-query ``semantic_dedup_kn`` measures the k ∝ N MITIGATION
 at the scaled corpus (8 → 8·K), holding per-cell size — and so the
 within-cell quadratic pair term — constant, which is how production runs
 SemDeDup. Compare its exponent against plain ``semantic_dedup`` (fixed
-k=8) from the same window.
+k=8) from the same window. Both arms run ``kmeans_clusters``' one Lloyd
+refinement, the integer half-up mean the registered query's oracle replays;
+SCALE.md's round-12 k ∝ N table predates it and was taken on a float-mean
+refinement that has since been deleted.
 """
 
 from __future__ import annotations
